@@ -83,9 +83,7 @@ def forward_fill(
         .orderBy(order_col, *tie_breakers)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    for c in cols:
-        df = df.withColumn(c, F.last(F.col(c), ignorenulls=True).over(w))
-    return df
+    return df.withColumns({c: F.last(F.col(c), ignorenulls=True).over(w) for c in cols})
 
 
 def lag_diff(
@@ -110,6 +108,4 @@ def lag_diff(
 def clip_columns(df: DataFrame, cols: Sequence[str], lo: float = 0.0) -> DataFrame:
     """Clip listed numeric columns at a lower bound (P9,
     reference data_cleaner.py:225-228)."""
-    for c in cols:
-        df = df.withColumn(c, clip_lower(F.col(c), lo))
-    return df
+    return df.withColumns({c: clip_lower(F.col(c), lo) for c in cols})

@@ -23,9 +23,7 @@ def prefixed(df: DataFrame, prefix: str, exclude: Sequence[str] = ()) -> DataFra
     """Column-namespace disambiguation: rename every column to
     ``<prefix><col>`` except ``exclude`` (join keys). Replaces the
     reference's owid_/api_ prefix loop (data_merger.py:101-111)."""
-    return df.select(
-        *[F.col(c).alias(c if c in exclude else f"{prefix}{c}") for c in df.columns]
-    )
+    return df.toDF(*[c if c in exclude else f"{prefix}{c}" for c in df.columns])
 
 
 def merge_snapshot(history_latest: DataFrame, snapshot: DataFrame, key: str) -> DataFrame:

@@ -6,17 +6,23 @@ Reference parity map (file:line cites into /root/reference):
 - ``clean_history``     ← data_cleaner.clean_owid_data (data_cleaner.py:155-199)
 - ``clean_snapshot``    ← data_cleaner.clean_api_data (data_cleaner.py:202-252)
 - ``build_country_mapping`` ← data_merger.create_country_mapping (data_merger.py:29-64)
-- ``align_latest``      ← data_merger.align_temporal_data (data_merger.py:67-111)
-- ``covid_trends``      ← data_merger.calculate_trend_metrics (data_merger.py:114-218)
+- ``history_state``     ← data_merger.align_temporal_data + calculate_trend_metrics
+  (data_merger.py:67-218) folded into one per-country aggregate;
+  ``align_latest`` and ``covid_trends`` are projections of it
 - ``merge_datasets``    ← data_merger.merge_datasets (data_merger.py:221-273)
 - ``derive_metrics``    ← data_merger.calculate_derived_metrics (data_merger.py:276-352)
 - ``integration_summary`` ← data_merger.generate_integration_summary (data_merger.py:368-419)
 - analytics helpers     ← visualizer.py / streamlit_app.py query surface
 
 Differences by design (Spark semantics, SURVEY.md §7 "hard parts"):
-- order-dependent pandas ``last`` → explicit argmax (``latest_per_key``)
+- order-dependent pandas ``last`` → explicit argmax (``max_by`` in ``history_state``)
 - ``datetime.now()`` → injected ``now`` parameter (deterministic plans)
-- everything lazy; callers decide when to cache/materialize
+- lazy DataFrame → DataFrame functions, with one exception:
+  ``merge_datasets`` materialises the small per-country history state
+  (``localCheckpoint``) once per call, so every action on the merged
+  frame (gold write, summary, dashboard reads) re-runs only the
+  state ⋈ snapshot join, never the history scan, forward-fill and
+  aggregate
 - EXCLUDE_REGIONS additionally drops the UK constituent nations
   (England/Scotland/Wales/Northern Ireland) — OWID publishes them
   alongside 'United Kingdom', double-counting the UK in global sums.
@@ -28,9 +34,9 @@ import datetime
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, FloatType
 
 from covid_data_challenge_spark.functions.scalar import guarded_div, pct_gap, per_100k
-from covid_data_challenge_spark.operators.alignment import latest_per_key, trend_metrics
 from covid_data_challenge_spark.operators.cleaning import (
     clip_columns,
     filter_not_in,
@@ -156,20 +162,18 @@ def clean_snapshot(df: DataFrame) -> DataFrame:
          "current_active", "current_critical", "population"),
     )
     out = clip_columns(out, clip_cols)
-    if {"current_cases", "population"} <= set(out.columns):
-        out = out.withColumn(
-            "cases_per_100k", per_100k(F.col("current_cases"), F.col("population"))
+    cols = set(out.columns)
+    derived = {}
+    if {"current_cases", "population"} <= cols:
+        derived["cases_per_100k"] = per_100k(F.col("current_cases"), F.col("population"))
+    if {"current_deaths", "population"} <= cols:
+        derived["deaths_per_100k"] = per_100k(F.col("current_deaths"), F.col("population"))
+    if {"current_cases", "current_deaths"} <= cols:
+        derived["case_fatality_rate"] = guarded_div(
+            F.col("current_deaths"), F.col("current_cases"), 100.0, digits=3
         )
-    if {"current_deaths", "population"} <= set(out.columns):
-        out = out.withColumn(
-            "deaths_per_100k", per_100k(F.col("current_deaths"), F.col("population"))
-        )
-    if {"current_cases", "current_deaths"} <= set(out.columns):
-        out = out.withColumn(
-            "case_fatality_rate",
-            guarded_div(F.col("current_deaths"), F.col("current_cases"), 100.0, digits=3),
-        )
-    return out.withColumn("data_source", F.lit("disease_sh_current"))
+    derived["data_source"] = F.lit("disease_sh_current")
+    return out.withColumns(derived)
 
 
 def build_country_mapping(history: DataFrame, snapshot: DataFrame) -> DataFrame:
@@ -183,35 +187,89 @@ def build_country_mapping(history: DataFrame, snapshot: DataFrame) -> DataFrame:
     )
 
 
+#: Trend-window renames of the reference's output names (data_merger.py:190-200).
+_TREND_RENAMES = {
+    "total_cases": ("cases_change_30d", "cases_change_percent_30d"),
+    "total_deaths": ("deaths_change_30d", "deaths_change_percent_30d"),
+}
+
+
+def history_state(history: DataFrame, window_days: int = TREND_WINDOW_DAYS) -> DataFrame:
+    """Everything the merge needs from the history, in ONE per-country
+    aggregate (A6 + A11–A14, reference data_merger.py:67-218): the latest
+    full row, owid_-prefixed, and the trailing-window trend metrics.
+
+    Output columns: ``country_standardized``, ``owid_<c>`` for every other
+    history column (history order), then ``data_points_available``,
+    ``first_<v>``/``last_<v>`` per value column, ``avg_daily_<r>`` per rate
+    column, and the ``*_change_30d``/``*_change_percent_30d`` pairs —
+    exactly ``latest_per_key`` + ``prefixed`` left-joined with
+    ``trend_metrics`` (pinned by a parity test).
+
+    The window is a condition, not a filter: a row counts toward the trends
+    when ``date >= max(date) - window_days`` (the global max, one broadcast
+    1-row aggregate), and ``min_by``/``max_by`` see a NULL ordering — which
+    they skip — outside it. Trend columns are NULL for countries with fewer
+    than 2 rows in the window, as ``trend_metrics``' HAVING plus a left
+    join leaves them.
+    """
+    key, ts = "country_standardized", "date"
+    value_cols = _existing(history, tuple(_TREND_RENAMES))
+    rate_cols = _existing(history, ("new_cases", "new_deaths"))
+    max_ts = history.agg(F.max(ts).alias("__max_ts"))
+    in_window = F.col(ts) >= F.date_sub(F.col("__max_ts"), window_days)
+    order = F.struct(ts)
+    window_order = F.when(in_window, order)
+
+    aggs = [
+        F.max_by(F.struct(*history.columns), order).alias("__row"),
+        F.count(F.when(in_window, F.lit(1))).alias("__n"),
+    ]
+    for c in value_cols:
+        aggs.append(F.coalesce(F.min_by(c, window_order), F.lit(0.0)).alias(f"first_{c}"))
+        aggs.append(F.coalesce(F.max_by(c, window_order), F.lit(0.0)).alias(f"last_{c}"))
+    for c in rate_cols:
+        aggs.append(F.round(F.avg(F.when(in_window, F.col(c))), 2).alias(f"avg_daily_{c}"))
+    state = history.join(F.broadcast(max_ts)).groupBy(key).agg(*aggs)
+
+    enough = F.col("__n") >= 2
+    trends = {"data_points_available": F.col("__n")}
+    for c in value_cols:
+        trends[f"first_{c}"] = F.col(f"first_{c}")
+        trends[f"last_{c}"] = F.col(f"last_{c}")
+    for c in rate_cols:
+        trends[f"avg_daily_{c}"] = F.col(f"avg_daily_{c}")
+    for c in value_cols:
+        first, last = F.col(f"first_{c}"), F.col(f"last_{c}")
+        change, percent = _TREND_RENAMES[c]
+        trends[change] = F.round(last - first, 2)
+        trends[percent] = F.when(first > 0, F.round((last - first) / first * 100, 2)).otherwise(
+            F.lit(0.0)
+        )
+    return state.select(
+        key,
+        *[F.col("__row").getField(c).alias(f"owid_{c}") for c in history.columns if c != key],
+        *[F.when(enough, e).alias(name) for name, e in trends.items()],
+    )
+
+
 def align_latest(history: DataFrame) -> DataFrame:
     """A6: latest full row per country, owid_-prefixed for the merge
-    (reference data_merger.py:67-111)."""
-    latest = latest_per_key(history, "country_standardized", "date")
-    return prefixed(latest, "owid_", exclude=["country_standardized"])
+    (reference data_merger.py:67-111) — a projection of
+    :func:`history_state`."""
+    key = "country_standardized"
+    return history_state(history).select(
+        *[c if c == key else f"owid_{c}" for c in history.columns]
+    )
 
 
 def covid_trends(history: DataFrame, window_days: int = TREND_WINDOW_DAYS) -> DataFrame:
-    """A11–A14: trailing-window trend metrics per country."""
-    value_cols = _existing(history, ("total_cases", "total_deaths"))
-    rate_cols = _existing(history, ("new_cases", "new_deaths"))
-    out = trend_metrics(
-        history,
-        keys="country_standardized",
-        ts_col="date",
-        value_cols=value_cols,
-        rate_cols=rate_cols,
-        window_days=window_days,
-    )
-    renames = {
-        "total_cases_change": "cases_change_30d",
-        "total_cases_change_percent": "cases_change_percent_30d",
-        "total_deaths_change": "deaths_change_30d",
-        "total_deaths_change_percent": "deaths_change_percent_30d",
-    }
-    for old, new in renames.items():
-        if old in out.columns:
-            out = out.withColumnRenamed(old, new)
-    return out
+    """A11–A14: trailing-window trend metrics per country (countries with
+    fewer than 2 rows in the window dropped) — a projection of
+    :func:`history_state`."""
+    state = history_state(history, window_days)
+    cols = [c for c in state.columns if not c.startswith("owid_")]
+    return state.select(*cols).filter(F.col("data_points_available").isNotNull())
 
 
 def merge_datasets(
@@ -224,66 +282,76 @@ def merge_datasets(
     of latest historical state with the current snapshot, trends
     left-joined, derived metrics appended.
 
+    Not lazy: the per-country :func:`history_state` (one row per history
+    country) is computed and ``localCheckpoint``-ed here, once per call,
+    so the returned frame is that small state joined with the broadcast
+    snapshot. Every action on it — gold write, summary, dashboard reads —
+    re-runs only that join, never the history scan, forward-fill and
+    aggregate. The checkpoint keys nothing and lives as long as the
+    returned frame, so it cannot serve a stale history.
+
     ``now`` is injected (not wall-clock) so plans stay deterministic; None
     falls back to ``current_timestamp()`` for interactive use.
     """
-    aligned = align_latest(history)
-    trends = covid_trends(history, window_days)
-    snap = prefixed(snapshot, "api_", exclude=["country_standardized"])
-    merged = aligned.join(snap, "country_standardized", "inner").join(
-        trends, "country_standardized", "left"
-    )
+    key = "country_standardized"
+    state = history_state(history, window_days).localCheckpoint()
+    snap = prefixed(snapshot, "api_", exclude=[key])
+    latest = [c for c in state.columns if c.startswith("owid_")]
+    trends = [c for c in state.columns[1:] if not c.startswith("owid_")]
+    api = [c for c in snap.columns if c != key]
+    merged = state.join(F.broadcast(snap), key, "inner").select(key, *latest, *api, *trends)
     return derive_metrics(merged, now)
 
 
 def derive_metrics(merged: DataFrame, now: datetime.datetime | None = None) -> DataFrame:
     """Derived gap/rate metrics (reference data_merger.py:276-352)."""
-    out = merged
-    cols = set(out.columns)
+    cols = set(merged.columns)
+    derived = {}
     if {"api_current_cases", "owid_total_cases"} <= cols:
-        out = out.withColumn(
-            "cases_data_gap", F.col("api_current_cases") - F.col("owid_total_cases")
-        ).withColumn(
-            "cases_data_gap_percent",
-            pct_gap(F.col("api_current_cases"), F.col("owid_total_cases")),
+        derived["cases_data_gap"] = F.col("api_current_cases") - F.col("owid_total_cases")
+        derived["cases_data_gap_percent"] = pct_gap(
+            F.col("api_current_cases"), F.col("owid_total_cases")
         )
     if {"api_current_deaths", "owid_total_deaths"} <= cols:
-        out = out.withColumn(
-            "deaths_data_gap", F.col("api_current_deaths") - F.col("owid_total_deaths")
-        ).withColumn(
-            "deaths_data_gap_percent",
-            pct_gap(F.col("api_current_deaths"), F.col("owid_total_deaths")),
+        derived["deaths_data_gap"] = F.col("api_current_deaths") - F.col("owid_total_deaths")
+        derived["deaths_data_gap_percent"] = pct_gap(
+            F.col("api_current_deaths"), F.col("owid_total_deaths")
         )
     # population-adjusted comparison metrics use the OWID population
     # denominator and current_* names (reference data_merger.py:330-348)
     if {"api_current_cases", "owid_population"} <= cols:
-        out = out.withColumn(
-            "current_cases_per_100k",
-            per_100k(F.col("api_current_cases"), F.col("owid_population")),
+        derived["current_cases_per_100k"] = per_100k(
+            F.col("api_current_cases"), F.col("owid_population")
         )
     if {"api_current_deaths", "owid_population"} <= cols:
-        out = out.withColumn(
-            "current_deaths_per_100k",
-            per_100k(F.col("api_current_deaths"), F.col("owid_population")),
+        derived["current_deaths_per_100k"] = per_100k(
+            F.col("api_current_deaths"), F.col("owid_population")
         )
     if {"api_current_deaths", "api_current_cases"} <= cols:
-        out = out.withColumn(
-            "current_case_fatality_rate",
-            guarded_div(F.col("api_current_deaths"), F.col("api_current_cases"), 100.0, digits=3),
+        derived["current_case_fatality_rate"] = guarded_div(
+            F.col("api_current_deaths"), F.col("api_current_cases"), 100.0, digits=3
         )
     now_col = F.lit(now) if now is not None else F.current_timestamp()
-    out = out.withColumn("merge_timestamp", now_col)
+    derived["merge_timestamp"] = now_col
     if "owid_date" in cols:
-        out = out.withColumn(
-            "owid_data_age_days", F.datediff(F.to_date(now_col), F.to_date("owid_date"))
-        )
-    return out
+        derived["owid_data_age_days"] = F.datediff(F.to_date(now_col), F.to_date("owid_date"))
+    return merged.withColumns(derived)
 
 
 def integration_summary(merged: DataFrame) -> dict:
-    """Integration quality report (reference data_merger.py:368-419) —
-    everything computed in ONE aggregation pass + one top-k query; only
-    the tiny results are collected."""
+    """Integration quality report (reference data_merger.py:368-419) in ONE
+    Spark job: a single aggregation computes the counts, completeness,
+    gap and age figures and the top-10 by current cases; only that one
+    row is collected.
+
+    The top-10 rides the aggregate as the first ten of a sorted
+    ``collect_list`` of ``(cases IS NULL, [NOT isnan(cases),] -cases,
+    country)`` structs — the same order as ``orderBy(cases desc, country)``:
+    NULL cases last (an ascending struct sort would put them first without
+    the flag), NaN first among floats (``desc`` ranks NaN highest), then
+    ties by name. Over :func:`merge_datasets`' frame the job reads the
+    checkpointed per-country state and the snapshot, nothing more.
+    """
     key_cols = [
         c
         for c in (
@@ -308,30 +376,28 @@ def integration_summary(merged: DataFrame) -> dict:
             .cast("long")
             .alias("countries_with_old_data")
         )
+    if "api_current_cases" in merged.columns:
+        cases = F.col("api_current_cases")
+        rank = [cases.isNull()]
+        if isinstance(merged.schema["api_current_cases"].dataType, (FloatType, DoubleType)):
+            rank.append(~F.isnan(cases))
+        rank += [-cases, F.col("country_standardized")]
+        aggs.append(
+            F.slice(F.sort_array(F.collect_list(F.struct(*rank))), 1, 10).alias("top_10")
+        )
     row = merged.agg(*aggs).collect()[0].asDict()
 
     total = row["total_countries"] or 1
     completeness = {
         c: round(row[f"avail_{c}"] / total * 100, 2) for c in key_cols
     }
-    top10 = []
-    if "api_current_cases" in merged.columns:
-        top10 = [
-            r["country_standardized"]
-            for r in merged.orderBy(
-                F.col("api_current_cases").desc(), F.col("country_standardized")
-            )
-            .select("country_standardized")
-            .limit(10)
-            .collect()
-        ]
     return {
         "total_countries": row["total_countries"],
         "completeness_percent": completeness,
         "countries_with_large_gap": row.get("countries_with_large_gap"),
         "avg_abs_gap_percent": row.get("avg_abs_gap_percent"),
         "countries_with_old_data": row.get("countries_with_old_data"),
-        "top_10_by_current_cases": top10,
+        "top_10_by_current_cases": [r[-1] for r in row.get("top_10") or []],
     }
 
 

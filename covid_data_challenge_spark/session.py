@@ -18,6 +18,23 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def default_driver_memory(total_bytes: int | None = None) -> str:
+    """Local-mode driver heap: half the machine's physical memory, capped
+    at 16g (in MiB, e.g. ``"8046m"`` on a 15.7 GiB host). The driver JVM
+    also needs off-heap room (Arrow buffers, netty, metaspace) and the
+    Python workers run beside it, so a heap sized to the whole machine
+    lets one heavy job get the host OOM-killed where there is no swap.
+    ``total_bytes`` defaults to ``os.sysconf`` physical memory; if that is
+    unavailable the default is 4g."""
+    if total_bytes is None:
+        try:
+            total_bytes = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+        except (AttributeError, ValueError, OSError):
+            return "4g"
+    return f"{min(16 * 1024, total_bytes // 2 // (1024 * 1024))}m"
+
+
 _DEFAULT_CONF: dict[str, str] = {
     # Adaptive execution: runtime re-planning (partition coalescing, skew
     # join splitting, broadcast conversion) — the main lever that keeps one
@@ -44,9 +61,10 @@ _DEFAULT_CONF: dict[str, str] = {
     # 64 MB-threshold broadcast build (hashed relations inflate ~5-10×
     # over on-disk size) and OOMs under a 10× data stress
     # (SCALING.md §synthetic-sf1). In local[] the driver JVM IS the
-    # executor, so it gets the executor-grade sizing; on a real cluster
-    # the submitter's --driver-memory/--executor-memory override this.
-    "spark.driver.memory": "16g",
+    # executor, so it gets the executor-grade sizing, bounded by the
+    # machine (``default_driver_memory``); ``extra_conf`` and, on a real
+    # cluster, the submitter's --driver-memory override this.
+    "spark.driver.memory": default_driver_memory(),
     # Read-side split size: 128 MB keeps scan tasks right-sized at scale.
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
 }
@@ -72,14 +90,22 @@ def get_spark(
         master = f"local[{cpus}]" if cpus else "local[*]"
     builder = builder.master(master)
 
+    for k, v in session_conf(shuffle_partitions, extra_conf).items():
+        builder = builder.config(k, v)
+
+    return builder.getOrCreate()
+
+
+def session_conf(
+    shuffle_partitions: int | None = None, extra_conf: dict[str, str] | None = None
+) -> dict[str, str]:
+    """The conf :func:`get_spark` applies: the defaults, the shuffle
+    partition count (``$SPARK_GRAFT_SHUFFLE_PARTITIONS``, else 32), then
+    ``extra_conf`` over both."""
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-
     conf = dict(_DEFAULT_CONF)
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if extra_conf:
         conf.update(extra_conf)
-    for k, v in conf.items():
-        builder = builder.config(k, v)
-
-    return builder.getOrCreate()
+    return conf

@@ -19,13 +19,15 @@ from pyspark.sql import functions as F
 
 
 def csv_export_string(df: DataFrame, max_rows: int = 100_000) -> str:
-    """Serialize a small query result to a CSV string on the driver."""
-    n = df.limit(max_rows + 1).count()
-    if n > max_rows:
+    """Serialize a small query result to a CSV string on the driver — one
+    Spark job: at most ``max_rows + 1`` rows come back, and one too many
+    raises."""
+    pdf = df.limit(max_rows + 1).toPandas()
+    if len(pdf) > max_rows:
         raise ValueError(
             f"result exceeds {max_rows} rows — use write_csv() for distributed export"
         )
-    return df.toPandas().to_csv(index=False)
+    return pdf.to_csv(index=False)
 
 
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:

@@ -26,8 +26,13 @@ def duckdb_connection(sf_dir: str):
     exceeded 115 s — vs 28 s with the two disabled, identical rows;
     `corpus_prep_recipe_v5` 111 → 15 s, `embedding_top_pcs` 59 → 12 s).
     The oracles are hand-written with sensible join orders over
-    gate-scale data, so the optimizer phases buy nothing here; results
-    are unaffected (verified by the full 332-query sweep)."""
+    gate-scale data, so the optimizer phases buy nothing here. Row sets
+    are unaffected, and the full 332-query sweep passed with both phases
+    disabled. Float values are not guaranteed bit-identical, though: a
+    different plan can sum or average in a different order, and an oracle
+    that rounds a float expression near a half-step (such as
+    ``robust_anomaly_days_planted``'s ``round(d - seasonal, 6)``) can then
+    land on the other side of it."""
     import duckdb
 
     con = duckdb.connect()

@@ -19,6 +19,7 @@ from covid_data_challenge_spark.pipeline.covid import (
     clean_snapshot,
     compare_countries,
     covid_trends,
+    history_state,
     integration_summary,
     merge_datasets,
     overview_stats,
@@ -163,6 +164,107 @@ def test_integration_summary_completeness(spark, history, snapshot):
     assert summary["completeness_percent"]["owid_total_cases"] == 100.0
     assert summary["countries_with_large_gap"] == 2  # 25% and 33.3% gaps
     assert summary["top_10_by_current_cases"][0] == "USA"
+
+
+@pytest.fixture(scope="module")
+def state_history(spark):
+    """Cleaned-history-shaped frame for the folded state, NOT forward-filled
+    so NULL cumulatives survive. Global max date is 2024-03-31, so the
+    30-day window starts 2024-03-01:
+    - Alpha: 3 in-window rows with NULL gaps (first in-window NULL → 0);
+    - Beta: every row before the window (latest row, no trends);
+    - Gamma: exactly one in-window row (below the 2-point minimum);
+    - Delta: latest row has NULL total_cases;
+    - Eps: a row on the inclusive window start, and a NULL date (never
+      latest, never in window)."""
+    rows = [
+        ("Alpha", D(2024, 2, 20), 100.0, 1.0, 5.0, None),
+        ("Alpha", D(2024, 3, 2), None, 2.0, 6.0, 1_000),
+        ("Alpha", D(2024, 3, 15), 130.0, None, None, 1_000),
+        ("Alpha", D(2024, 3, 31), 160.0, 4.0, 9.0, 1_000),
+        ("Beta", D(2024, 1, 5), 50.0, 1.0, 2.0, 2_000),
+        ("Beta", D(2024, 2, 10), 70.0, 2.0, 3.0, 2_000),
+        ("Gamma", D(2024, 2, 1), 10.0, 0.0, 1.0, 3_000),
+        ("Gamma", D(2024, 3, 20), 20.0, 1.0, 2.0, 3_000),
+        ("Delta", D(2024, 3, 10), 400.0, 10.0, 7.0, 4_000),
+        ("Delta", D(2024, 3, 30), None, 12.0, None, 4_000),
+        ("Eps", None, 999.0, 99.0, 99.0, 5_000),
+        ("Eps", D(2024, 3, 1), 0.0, 0.0, 0.0, 5_000),
+        ("Eps", D(2024, 3, 6), 8.0, 1.0, 1.0, 5_000),
+    ]
+    return spark.createDataFrame(
+        rows,
+        "country_standardized string, date date, total_cases double, "
+        "total_deaths double, new_cases double, population long",
+    )
+
+
+def test_history_state_matches_latest_plus_left_joined_trends(state_history):
+    """The folded per-country state equals the composition it replaces:
+    ``latest_per_key`` (owid_-prefixed) left-joined with ``trend_metrics``
+    (renamed), same columns in the same order, same values bit for bit."""
+    from covid_data_challenge_spark.operators.alignment import latest_per_key, trend_metrics
+    from covid_data_challenge_spark.operators.joins import prefixed
+
+    h = state_history
+    key = "country_standardized"
+    latest = prefixed(latest_per_key(h, key, "date"), "owid_", exclude=[key])
+    trends = trend_metrics(
+        h, keys=key, ts_col="date", value_cols=["total_cases", "total_deaths"],
+        rate_cols=["new_cases"], window_days=30,
+    )
+    for old, new in {
+        "total_cases_change": "cases_change_30d",
+        "total_cases_change_percent": "cases_change_percent_30d",
+        "total_deaths_change": "deaths_change_30d",
+        "total_deaths_change_percent": "deaths_change_percent_30d",
+    }.items():
+        trends = trends.withColumnRenamed(old, new)
+    want = latest.join(trends, key, "left")
+
+    got = history_state(h)
+    assert got.columns == want.columns
+    by_key = lambda df: {r[key]: r for r in df.collect()}  # noqa: E731
+    got_rows, want_rows = by_key(got), by_key(want)
+    assert got_rows == want_rows
+    # the fixture's corners are really exercised
+    assert got_rows["Alpha"]["first_total_cases"] == 0.0  # NULL first → 0
+    assert got_rows["Alpha"]["data_points_available"] == 3
+    assert got_rows["Beta"]["data_points_available"] is None  # nothing in window
+    assert got_rows["Gamma"]["data_points_available"] is None  # one row in window
+    assert got_rows["Delta"]["owid_total_cases"] is None  # latest row's NULL kept
+    assert got_rows["Eps"]["owid_date"] == D(2024, 3, 6)
+
+    # the public projections keep their shapes
+    assert by_key(covid_trends(h)) == {k: r for k, r in by_key(trends).items()}
+    assert set(by_key(covid_trends(h))) == {"Alpha", "Delta", "Eps"}
+
+
+def test_integration_summary_top10_nulls_last_then_name(spark):
+    """Top-10 by current cases in ``orderBy(cases desc, name)`` order:
+    ties broken by name ascending, NULL cases after every value."""
+    rows = [
+        ("K", 5), ("A", None), ("J", 5), ("B", 9), ("Z", None), ("C", 1),
+        ("D", 7), ("E", 7), ("F", 0), ("G", 3), ("H", 3), ("I", 2),
+    ]
+    merged = spark.createDataFrame(rows, "country_standardized string, api_current_cases long")
+    want = [
+        r["country_standardized"]
+        for r in merged.orderBy(F.col("api_current_cases").desc(), "country_standardized")
+        .limit(10)
+        .collect()
+    ]
+    assert want == ["B", "D", "E", "J", "K", "G", "H", "I", "C", "F"]
+    assert integration_summary(merged)["top_10_by_current_cases"] == want
+    # fewer than 10 rows, nulls included: all of them, nulls last by name
+    few = merged.filter(F.col("country_standardized").isin("Z", "A", "C", "K", "J"))
+    assert integration_summary(few)["top_10_by_current_cases"] == ["J", "K", "C", "A", "Z"]
+    # floating cases: NaN ranks first under desc, as in orderBy
+    floats = spark.createDataFrame(
+        [("X", 1.0), ("Y", float("nan")), ("W", None), ("V", 2.0)],
+        "country_standardized string, api_current_cases double",
+    )
+    assert integration_summary(floats)["top_10_by_current_cases"] == ["Y", "V", "X", "W"]
 
 
 def test_analytics_surface(history, snapshot):

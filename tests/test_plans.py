@@ -48,6 +48,42 @@ def test_latest_per_key_is_partial_argmax_aggregate(spark, sf_dir):
     assert "l_partkey" not in plan  # unused fact columns never leave parquet
 
 
+def test_merged_frame_never_rescans_the_history(spark, tmp_path):
+    """``merge_datasets`` materialises the per-country history state once,
+    so the frame it returns — what the gold write, the summary and every
+    dashboard read execute — joins that checkpoint with the broadcast
+    snapshot and contains no history parquet scan, window or aggregate."""
+    import datetime
+
+    from covid_data_challenge_spark.pipeline.covid import (
+        clean_history,
+        clean_snapshot,
+        merge_datasets,
+    )
+    from covid_data_challenge_spark.sources.readers import load_table
+    from covid_data_challenge_spark.sources.sinks import write_parquet
+
+    d = datetime.date(2024, 1, 1)
+    hist = spark.createDataFrame(
+        [("France", d + datetime.timedelta(days=i), 10.0 * i, 1.0 * i) for i in range(40)],
+        "country string, date date, total_cases double, total_deaths double",
+    )
+    write_parquet(hist, str(tmp_path / "history.parquet"))
+    snap = spark.createDataFrame(
+        [("France", 500, 40)], "country string, current_cases long, current_deaths long"
+    )
+    merged = merge_datasets(
+        clean_history(load_table(spark, str(tmp_path), "history")),
+        clean_snapshot(snap),
+        now=datetime.datetime(2024, 3, 1),
+    )
+    plan = _plan(spark, merged)
+    assert "FileScan parquet" not in plan and "history" not in plan
+    assert "Window" not in plan and "max_by" not in plan
+    assert "BroadcastHashJoin" in plan
+    assert merged.count() == 1
+
+
 def test_regional_revenue_broadcasts_dims_and_never_shuffles_fact(spark, sf_dir):
     plan = _plan(spark, REGISTRY["regional_revenue"].spark(spark, sf_dir))
     assert "BroadcastHashJoin" in plan
