@@ -9,7 +9,7 @@ from __future__ import annotations
 
 from collections.abc import Mapping, Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from covid_data_challenge_spark.functions.scalar import clip_lower
@@ -22,24 +22,21 @@ def standardize_keys(
     out_col: str | None = None,
 ) -> DataFrame:
     """Dictionary key standardization with pass-through fallback (P7/J5,
-    reference data_cleaner.py:41-51).
+    reference data_cleaner.py:41-51): ``out_col`` is appended, mapped keys
+    get their value, unmapped keys pass through and NULL stays NULL.
 
-    Implemented as a broadcast hash join against a tiny mapping DataFrame +
-    ``coalesce`` — the scalable shape of a dict lookup (no shuffle of the
-    fact side; the mapping ships to every executor once). For very small
-    mappings an inline ``create_map`` literal would also work, but the join
-    keeps one code path however large the mapping grows.
+    The mapping is configuration-sized (tens of entries), so it is an
+    inline ``create_map`` literal looked up with ``coalesce(map[key], key)``:
+    no join, no exchange, and no Python-built mapping RDD, so the plan is a
+    pure function of ``df``'s plan — two calls over the same input are
+    ``sameSemantics``, which ``merge_datasets``' history-state memo relies on.
     """
     out_col = out_col or f"{key_col}_standardized"
-    spark = df.sparkSession
-    map_df = spark.createDataFrame(
-        [(k, v) for k, v in mapping.items()], schema=f"__from string, __to string"
-    )
-    return (
-        df.join(F.broadcast(map_df), df[key_col] == map_df["__from"], "left")
-        .withColumn(out_col, F.coalesce(F.col("__to"), F.col(key_col)))
-        .drop("__from", "__to")
-    )
+    key = F.col(key_col)
+    if not mapping:
+        return df.withColumn(out_col, key)
+    lookup = F.create_map(*[F.lit(x) for kv in mapping.items() for x in kv])
+    return df.withColumn(out_col, F.coalesce(lookup[key], key))
 
 
 def select_existing(df: DataFrame, cols: Sequence[str]) -> DataFrame:

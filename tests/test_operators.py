@@ -75,7 +75,9 @@ def test_lag_diff_clips_and_fills(spark):
 
 
 def test_standardize_keys_maps_and_passes_through(spark):
-    df = spark.createDataFrame([("USA",), ("Bosnia",), ("Afghanistan",)], "country string")
+    df = spark.createDataFrame(
+        [("USA",), ("Bosnia",), ("Afghanistan",), (None,)], "country string"
+    )
     out = standardize_keys(
         df, {"USA": "United States", "Bosnia": "Bosnia and Herzegovina"}, "country"
     ).collect()
@@ -84,6 +86,7 @@ def test_standardize_keys_maps_and_passes_through(spark):
         "USA": "United States",
         "Bosnia": "Bosnia and Herzegovina",
         "Afghanistan": "Afghanistan",
+        None: None,  # a NULL key stays NULL
     }
 
 

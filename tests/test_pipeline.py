@@ -267,6 +267,158 @@ def test_integration_summary_top10_nulls_last_then_name(spark):
     assert integration_summary(floats)["top_10_by_current_cases"] == ["Y", "V", "X", "W"]
 
 
+def _memo_history(spark, scale: float = 1.0):
+    """40 days of two countries, one of them mapped ('United States' → 'USA')."""
+    rows = [
+        (c, D(2024, 1, 1) + datetime.timedelta(days=i), scale * base * i, scale * i)
+        for c, base in (("Afghanistan", 10.0), ("United States", 100.0))
+        for i in range(40)
+    ]
+    return spark.createDataFrame(
+        rows, "country string, date date, total_cases double, total_deaths double"
+    )
+
+
+def _write_memo_history(spark, root, scale: float = 1.0):
+    """Write the memo fixture as ``<root>/history.parquet`` and return a
+    reader that declares a fresh ``clean_history(load_table(...))``."""
+    from covid_data_challenge_spark.sources.readers import load_table
+    from covid_data_challenge_spark.sources.sinks import write_parquet
+
+    write_parquet(_memo_history(spark, scale), str(root / "history.parquet"))
+    return lambda: clean_history(load_table(spark, str(root), "history"))
+
+
+def _spark_jobs(spark, fn):
+    """Run ``fn`` under a fresh job group; return its result and the
+    number of Spark jobs it started."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"memo-test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job-start events are async
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _merged_rows(merged) -> dict:
+    return {r["country_standardized"]: r.asDict() for r in merged.collect()}
+
+
+def test_merge_memo_serves_unchanged_history_without_jobs(spark, snapshot, tmp_path):
+    """Re-merging against an unchanged history file reuses the checkpointed
+    state: the second merge starts no Spark job, and its values equal a
+    fresh computation from an in-memory copy of the same history."""
+    read = _write_memo_history(spark, tmp_path)
+    snap = clean_snapshot(snapshot)
+    merge_datasets(read(), snap, now=NOW)
+    history = read()  # declaring the read infers the schema: a job of its own
+    merged, jobs = _spark_jobs(spark, lambda: merge_datasets(history, snap, now=NOW))
+    assert jobs == 0
+    want = _merged_rows(merge_datasets(clean_history(_memo_history(spark)), snap, now=NOW))
+    assert _merged_rows(merged) == want
+    assert set(want) == {"Afghanistan", "USA"}
+    assert want["USA"]["owid_total_cases"] == 3900.0
+
+
+def test_merge_memo_invalidated_by_history_rewrite(spark, snapshot, tmp_path):
+    """Overwriting the history parquet with changed values misses the memo:
+    the next merge shows the new values, and the memo then holds only the
+    new version's state (a further merge is a hit)."""
+    from covid_data_challenge_spark.pipeline import covid
+
+    snap = clean_snapshot(snapshot)
+    read = _write_memo_history(spark, tmp_path)
+    before = _merged_rows(merge_datasets(read(), snap, now=NOW))
+    assert before["Afghanistan"]["owid_total_cases"] == 390.0
+
+    read = _write_memo_history(spark, tmp_path, scale=2.0)
+    after, jobs = _spark_jobs(spark, lambda: _merged_rows(merge_datasets(read(), snap, now=NOW)))
+    assert jobs > 0
+    assert after["Afghanistan"]["owid_total_cases"] == 780.0
+    assert after["USA"]["cases_change_30d"] == 2.0 * before["USA"]["cases_change_30d"]
+
+    history = read()
+    key, held, _ = covid._STATE_MEMO
+    assert key[2] == covid._input_fingerprint(history)
+    assert held.sameSemantics(history)
+    _, jobs = _spark_jobs(spark, lambda: merge_datasets(history, snap, now=NOW))
+    assert jobs == 0
+
+
+def test_merge_memo_misses_on_another_window_or_plan(spark, snapshot, tmp_path):
+    """Over one unchanged file, a different ``window_days`` (part of the
+    key) or a different history plan (not ``sameSemantics``) recomputes
+    the state instead of serving the memoised one."""
+    read = _write_memo_history(spark, tmp_path)
+    snap = clean_snapshot(snapshot)
+    month = _merged_rows(merge_datasets(read(), snap, now=NOW))
+    history = read()
+    week, jobs = _spark_jobs(
+        spark, lambda: _merged_rows(merge_datasets(history, snap, now=NOW, window_days=7))
+    )
+    assert jobs > 0
+    assert month["USA"]["data_points_available"] == 31
+    assert week["USA"]["data_points_available"] == 8
+    assert week["USA"]["cases_change_30d"] == 700.0
+
+    early = read().filter(F.col("date") < D(2024, 1, 21))
+    got = _merged_rows(merge_datasets(early, snap, now=NOW, window_days=7))
+    assert got["USA"]["owid_total_cases"] == 1900.0
+
+
+def test_merge_memo_concurrent_callers_share_one_state(spark, tmp_path):
+    """Concurrent merges against one new history version compute its state
+    once: every caller gets the same checkpointed frame."""
+    import sys
+    import threading
+
+    from covid_data_challenge_spark.pipeline import covid
+
+    read = _write_memo_history(spark, tmp_path)
+    histories = [read() for _ in range(6)]
+    got = [None] * len(histories)
+
+    def work(i):
+        got[i] = covid._checkpointed_state(histories[i], 30)
+
+    threads = [threading.Thread(target=work, args=(i,)) for i in range(len(histories))]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert got[0] is not None and all(g is got[0] for g in got)
+
+
+def test_merge_memo_skips_in_memory_history(spark, snapshot, tmp_path):
+    """A history that reads no files is never memoised and leaves the
+    held entry alone; its merge is still correct."""
+    from covid_data_challenge_spark.pipeline import covid
+
+    read = _write_memo_history(spark, tmp_path)
+    snap = clean_snapshot(snapshot)
+    from_file = _merged_rows(merge_datasets(read(), snap, now=NOW))
+    held = covid._STATE_MEMO
+    in_memory = _memo_history(spark)
+    assert covid._input_fingerprint(in_memory) is None
+    got, jobs = _spark_jobs(
+        spark, lambda: _merged_rows(merge_datasets(clean_history(in_memory), snap, now=NOW))
+    )
+    assert jobs > 0
+    assert covid._STATE_MEMO is held
+    assert got == from_file
+
+
 def test_analytics_surface(history, snapshot):
     merged = merge_datasets(clean_history(history), clean_snapshot(snapshot), now=NOW)
     top1 = top_k_by(merged, "api_current_cases", 1).collect()

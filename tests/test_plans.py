@@ -84,6 +84,39 @@ def test_merged_frame_never_rescans_the_history(spark, tmp_path):
     assert merged.count() == 1
 
 
+def test_clean_history_plan_is_a_function_of_its_input(spark, tmp_path):
+    """``merge_datasets``' history-state memo only hits when two
+    independently declared cleaned histories over one file compare
+    ``sameSemantics``, so nothing in ``clean_history`` may mint fresh
+    plan nodes (a Python-built DataFrame, a random id) per call."""
+    import datetime
+
+    from covid_data_challenge_spark.pipeline.covid import clean_history
+    from covid_data_challenge_spark.sources.readers import load_table
+    from covid_data_challenge_spark.sources.sinks import write_parquet
+
+    d = datetime.date(2024, 1, 1)
+    write_parquet(
+        spark.createDataFrame(
+            [("United States", d, 1.0, 0.0), ("World", d, 9.0, 1.0)],
+            "country string, date date, total_cases double, total_deaths double",
+        ),
+        str(tmp_path / "history.parquet"),
+    )
+    read = lambda: clean_history(load_table(spark, str(tmp_path), "history"))  # noqa: E731
+    assert read().sameSemantics(read())
+
+
+def test_standardize_keys_is_a_literal_lookup(spark, sf_dir):
+    """The key mapping is an inline map literal: no join against a
+    mapping table and no Python-built RDD in the plan."""
+    df = REGISTRY["standardize_keys"].spark(spark, sf_dir)
+    optimized = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in optimized and "LogicalRDD" not in optimized
+    assert "map(keys: [" in optimized
+    assert "Exchange" not in _plan(spark, df, "simple")
+
+
 def test_regional_revenue_broadcasts_dims_and_never_shuffles_fact(spark, sf_dir):
     plan = _plan(spark, REGISTRY["regional_revenue"].spark(spark, sf_dir))
     assert "BroadcastHashJoin" in plan
