@@ -69,9 +69,9 @@ def _default_shards(df: DataFrame) -> int:
     ``num_shards=32`` default was a parallelism CAP on every consumer —
     at cluster scale the within-shard window would run ≤32 tasks over
     |rows|/32-row partitions (guide §2.5). Default to the session's
-    ``defaultParallelism`` (cluster cores — the widen() discipline),
-    floored at 32 so small sessions keep the historically-tested shard
-    width. Results are shard-count-invariant by construction (pinned by
+    ``defaultParallelism`` (cluster cores, the width
+    ``queries_shared._widened`` repartitions scans to), floored at 32 so
+    small sessions keep the historically-tested shard width. Results are shard-count-invariant by construction (pinned by
     test_operators' dense-rank/cumsum shard sweeps)."""
     return max(df.sparkSession.sparkContext.defaultParallelism, 32)
 

@@ -36,7 +36,6 @@ Differences by design (Spark semantics, SURVEY.md §7 "hard parts"):
 from __future__ import annotations
 
 import datetime
-import os
 import threading
 from urllib.parse import unquote, urlparse
 
@@ -54,6 +53,7 @@ from covid_data_challenge_spark.operators.cleaning import (
     standardize_keys,
 )
 from covid_data_challenge_spark.operators.joins import key_membership, prefixed
+from covid_data_challenge_spark.sources.readers import file_fingerprint
 
 #: Country-name harmonization: OWID name → disease.sh API name, applied to
 #: the OWID history source ONLY (the API snapshot keeps its original names).
@@ -287,20 +287,17 @@ _STATE_LOCK = threading.Lock()
 
 
 def _input_fingerprint(df: DataFrame) -> tuple | None:
-    """Sorted ``(uri, size, mtime_ns)`` of the local files ``df`` reads, or
-    None when it reads none (in-memory or checkpointed frames) or one of
-    them cannot be stat'ed (gone, or not on the local file system)."""
-    files = []
+    """:func:`~covid_data_challenge_spark.sources.readers.file_fingerprint`
+    of the files ``df`` reads, or None when it reads none (in-memory or
+    checkpointed frames) or one of them is not on the local file system or
+    cannot be stat'ed."""
+    paths = []
     for uri in df.inputFiles():
         parsed = urlparse(uri)
         if parsed.scheme not in ("", "file"):
             return None
-        try:
-            st = os.stat(unquote(parsed.path))
-        except OSError:
-            return None
-        files.append((uri, st.st_size, st.st_mtime_ns))
-    return tuple(sorted(files)) or None
+        paths.append(unquote(parsed.path))
+    return file_fingerprint(paths)
 
 
 def _checkpointed_state(history: DataFrame, window_days: int) -> DataFrame:

@@ -83,11 +83,15 @@ WITH latest AS (
     ) WHERE rn = 1
 ),
 stats AS (
-    SELECT o_custkey,
-           count(*) AS order_count,
-           round(sum(o_totalprice), 2) AS total_spent,
-           round(avg(o_totalprice), 2) AS avg_order_price
-    FROM orders GROUP BY o_custkey
+    SELECT o_custkey, order_count,
+           total_cents / 100.0 AS total_spent,
+           ((2 * total_cents + order_count) // (2 * order_count)) / 100.0 AS avg_order_price
+    FROM (
+        SELECT o_custkey,
+               count(*) AS order_count,
+               sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS total_cents
+        FROM orders GROUP BY o_custkey
+    )
 ),
 mx AS (SELECT max(o_orderdate) AS max_date FROM orders)
 SELECT c.c_custkey, c.c_name, c.c_mktsegment,
@@ -116,6 +120,10 @@ def flagship_customer_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     # row_number()=1 window would, but the whole per-customer state now
     # computes in ONE partial-aggregated pass — one orders scan and one
     # shuffle instead of two of each (the fact table is the 100 TB side).
+    # Sum and mean are exact by construction: both engines add the same
+    # whole-cent integers and divide them by 100 once, so the results are
+    # bit-identical (a rounded float average sits on a knife-edge whenever
+    # the exact mean ends in a half cent).
     per_cust = orders.groupBy("o_custkey").agg(
         F.max_by(
             F.struct(
@@ -125,15 +133,17 @@ def flagship_customer_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.struct("o_orderdate", "o_orderkey"),
         ).alias("__latest"),
         F.count(F.lit(1)).alias("order_count"),
-        F.round(F.sum("o_totalprice"), 2).alias("total_spent"),
-        F.round(F.avg("o_totalprice"), 2).alias("avg_order_price"),
+        F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).alias("__cents"),
     ).select(
         "o_custkey",
         F.col("__latest.latest_order_date").alias("latest_order_date"),
         F.col("__latest.latest_order_price").alias("latest_order_price"),
         "order_count",
-        "total_spent",
-        "avg_order_price",
+        (F.col("__cents") / 100.0).alias("total_spent"),
+        # half-up mean in whole cents: floor((2·cents + n) / 2n)
+        (F.expr("(2 * __cents + order_count) div (2 * order_count)") / 100.0).alias(
+            "avg_order_price"
+        ),
     )
     # Global scalar: a one-column scan DuckDB/parquet stats make cheap.
     max_date = orders.agg(F.max("o_orderdate").alias("__max_date"))

@@ -80,7 +80,7 @@ from covid_data_challenge_spark.operators.similarity import (
     cosine_topk,
 )
 from covid_data_challenge_spark.registry import register
-from covid_data_challenge_spark.sources.readers import load_table
+from covid_data_challenge_spark.sources.readers import load_table, table_memo
 from covid_data_challenge_spark.operators.sampling import md5_unit_fraction_sql
 from covid_data_challenge_spark.operators.bpe import (  # noqa: E402
     bpe_merge_oracle_sql,
@@ -126,32 +126,17 @@ def _docs_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "documents")
 
 
-#: (applicationId, path, mtime, target) → does this scan need widening?
-#: VERDICT r12 what's-wrong #4: `widen()` probed `df.rdd.getNumPartitions()`
-#: on EVERY loader call — a full analysis+physical-planning pass plus file
-#: listing on the driver per `_docs`/`_emb`/`_events` call site, per query
-#: construction. The widen decision is a pure function of (file set,
-#: defaultParallelism), so it is probed once per (session, file, mtime)
-#: and memoized; the source mtime in the key keeps regenerated testdata
-#: from being served a stale decision.
-_WIDEN_CACHE: dict[tuple, bool] = {}
-
-
 def _widened(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    import os
-
+    """``load_table``, repartitioned to ``defaultParallelism`` when its scan
+    plans fewer partitions than that. Probing the planned partitions is an
+    analysis and physical-planning pass, so the decision is made once per
+    (file version, parallelism) and kept in the table's scan-catalog entry
+    (``readers.table_memo``), which a rewritten file does not share."""
     df = load_table(spark, sf_dir, name)
     target = spark.sparkContext.defaultParallelism
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        mtime = os.path.getmtime(path)
-    except OSError:
-        mtime = 0.0
-    key = (spark.sparkContext.applicationId, path, mtime, target)
-    need = _WIDEN_CACHE.get(key)
-    if need is None:
-        need = df.rdd.getNumPartitions() < target
-        _WIDEN_CACHE[key] = need
+    need = table_memo(
+        spark, sf_dir, name, ("widen", target), lambda: df.rdd.getNumPartitions() < target
+    )
     return df.repartition(target) if need else df
 
 

@@ -67,6 +67,15 @@ _DEFAULT_CONF: dict[str, str] = {
     "spark.driver.memory": default_driver_memory(),
     # Read-side split size: 128 MB keeps scan tasks right-sized at scale.
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
+    # Generated-class cache (a static conf: it applies at session start).
+    # Spark's default of 100 is below one pass of the 19 bench.py
+    # headline + warehouse queries, which compiles about 235 classes, so
+    # each class was evicted before its next use and every pass recompiled
+    # all of them (233-238 compiles per warm pass on a 4-core local
+    # session over sf0.01 tables, counted with CodegenMetrics; 0 at 1000).
+    # 1000 holds that pass plus the refresh and dashboard surface with
+    # headroom.
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 

@@ -12,12 +12,17 @@ The reference scans two external sources with inferred schemas:
 
 Parquet loaders for the driver's synthetic tables live here too; every
 query in the engine goes through them so column pruning / predicate
-pushdown reach the parquet scan.
+pushdown reach the parquet scan. They resolve each file version's schema
+once per session (the scan catalog, ``_read_parquet``); only schemas are
+kept, so every call still lists and scans the files.
 """
 
 from __future__ import annotations
 
 import os
+import stat
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,9 +42,108 @@ TESTDATA_TABLES = (
 )
 
 
+def file_fingerprint(paths) -> tuple | None:
+    """Sorted ``(path, size, mtime_ns)`` of the data files under the local
+    ``paths`` (files or directories), or None when there are none or one
+    cannot be stat'ed.
+
+    Directories are walked the way Spark's file index lists them: nested
+    partition directories are entered, and names starting with ``.`` or
+    with ``_`` (except ``_k=v`` partition directories) are skipped, so
+    ``_SUCCESS`` markers and ``.crc`` sidecars do not count. The key
+    cannot see a rewrite that keeps a file's size within one mtime tick.
+    """
+    files = []
+    pending = list(paths)
+    while pending:
+        path = pending.pop()
+        try:
+            st = os.stat(path)
+            if stat.S_ISDIR(st.st_mode):
+                pending.extend(
+                    e.path for e in os.scandir(path)
+                    if not (e.name.startswith(".")
+                            or (e.name.startswith("_") and "=" not in e.name))
+                )
+                continue
+        except OSError:
+            return None
+        files.append((path, st.st_size, st.st_mtime_ns))
+    return tuple(sorted(files)) or None
+
+
+#: Scan catalog bound, in file versions. A registry round reads about ten
+#: table versions; a refresh service opens one new gold version per
+#: refresh, so an unbounded map would grow for as long as it runs.
+SCAN_CATALOG_SIZE = 256
+
+
+class _Scan:
+    """One scan-catalog entry: the resolved schema of one file version, and
+    values probed from that version (``derived``), which leave with it."""
+
+    __slots__ = ("schema", "derived")
+
+    def __init__(self, schema: T.StructType):
+        self.schema = schema
+        self.derived: dict = {}
+
+
+#: (application id, path, :func:`file_fingerprint`) → :class:`_Scan`, least
+#: recently used first.
+_CATALOG: OrderedDict[tuple, _Scan] = OrderedDict()
+_CATALOG_LOCK = threading.Lock()
+
+
+def _scan_key(spark: SparkSession, path: str) -> tuple | None:
+    files = file_fingerprint([path])
+    return None if files is None else (spark.sparkContext.applicationId, path, files)
+
+
+def _catalog_get(key: tuple | None) -> _Scan | None:
+    if key is None:
+        return None
+    with _CATALOG_LOCK:
+        entry = _CATALOG.get(key)
+        if entry is not None:
+            _CATALOG.move_to_end(key)
+        return entry
+
+
+def _read_parquet(spark: SparkSession, path: str, nanos_as_long: bool) -> DataFrame:
+    """Scan ``path``, resolving its schema once per file version.
+
+    The first read of a version infers the schema (file listing, footers);
+    later reads pass it to ``spark.read.schema``, which skips the footers.
+    Each call still declares a fresh relation, so a self-join of two reads
+    keeps distinct attributes; only the schema is shared, never data."""
+    key = _scan_key(spark, path)
+    entry = _catalog_get(key)
+    if entry is not None:
+        return spark.read.schema(entry.schema).parquet(path)
+    if nanos_as_long:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    try:
+        raw = spark.read.parquet(path)
+    finally:
+        if nanos_as_long:
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    if key is not None:
+        with _CATALOG_LOCK:
+            _CATALOG[key] = _Scan(raw.schema)
+            while len(_CATALOG) > SCAN_CATALOG_SIZE:
+                _CATALOG.popitem(last=False)
+    return raw
+
+
+def _table_path(sf_dir: str, name: str) -> str:
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one synthetic table. Plain ``spark.read.parquet`` so Catalyst
-    can push filters and prune columns into the scan.
+    """Scan one synthetic table. Plain parquet scan so Catalyst can push
+    filters and prune columns into it; the schema is resolved once per
+    file version (:func:`_read_parquet`).
 
     The ``events`` table has shipped as TIMESTAMP(NANOS) (a parquet type
     Spark refuses by default — read via the nanos-as-long escape hatch and
@@ -54,17 +158,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ts-predicates keep pushing down; the cast below is the safety net for
     foreign sessions (e.g. the driver's) that keep NTZ inference on.
     """
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        try:
-            raw = spark.read.parquet(path)
-        finally:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
-        if dict(raw.dtypes).get("ts") == "bigint":
-            raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    else:
-        raw = spark.read.parquet(path)
+    raw = _read_parquet(spark, _table_path(sf_dir, name), nanos_as_long=name == "events")
+    if name == "events" and dict(raw.dtypes).get("ts") == "bigint":
+        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     ntz_cols = [c for c, t in raw.dtypes if t == "timestamp_ntz"]
     if ntz_cols:
         raw = raw.withColumns(
@@ -73,35 +169,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return raw
 
 
-def widen(df: DataFrame) -> DataFrame:
-    """Restore scan parallelism lost to unsplittable tiny inputs
-    (optimization guide §2.5, input skew: "one huge unsplittable file …
-    repartition immediately after the read").
-
-    The driver's fixture tables each ship as ONE parquet file with ONE
-    row group, so every scan plans a single task and any per-row-heavy
-    stage fused onto it (n-gram explode + md5, EM expectation passes,
-    LR feature builds, embedding folds) runs on 1 of the N cores — the
-    round-12 profile measured gopher's gram stage at 52.8 s single-task
-    vs 2.9 s after a 32-way repartition. This helper is deliberately
-    conditional so it is scale-adaptive, not a local[32] constant:
-
-    - when the scan already plans >= defaultParallelism partitions (any
-      realistically-sized input, e.g. the 100 TB layout of 128 MB+
-      multi-row-group files), it is a NO-OP — no exchange is added and
-      the plan is byte-identical to the unwidened one;
-    - only when the planned scan parallelism is below the core count
-      does it pay one round-robin exchange of the (by construction
-      tiny — it fit in fewer splits than cores) input.
-
-    Apply it at compute-heavy call sites only; cheap scan+agg queries
-    keep their exchange-free plans (and their plan-pin tests).
-    """
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
-        return df
-    return df.repartition(target)
+def table_memo(spark: SparkSession, sf_dir: str, name: str, what, compute):
+    """``compute()``, memoised in the scan-catalog entry of the table's
+    current file version, so the value cannot outlive the version it was
+    probed on. Computed afresh on every call when the table has no entry
+    (no local files, or not read through :func:`load_table` yet)."""
+    entry = _catalog_get(_scan_key(spark, _table_path(sf_dir, name)))
+    if entry is None:
+        return compute()
+    with _CATALOG_LOCK:
+        if what in entry.derived:
+            return entry.derived[what]
+    value = compute()
+    with _CATALOG_LOCK:
+        return entry.derived.setdefault(what, value)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names=TESTDATA_TABLES) -> dict[str, DataFrame]:

@@ -19,3 +19,12 @@ def test_session_conf_uses_the_machine_default_and_extra_conf_wins():
     conf = session_conf(8, extra_conf={"spark.driver.memory": "2g"})
     assert conf["spark.driver.memory"] == "2g"
     assert conf["spark.sql.shuffle.partitions"] == "8"
+
+
+def test_codegen_cache_holds_a_registry_round(spark):
+    """One pass of the bench.py headline + warehouse queries compiles about
+    235 classes; the cache must hold them, and it is set at session start."""
+    assert int(session_conf()["spark.sql.codegen.cache.maxEntries"]) >= 500
+    assert int(spark.conf.get("spark.sql.codegen.cache.maxEntries")) >= 500
+    conf = session_conf(extra_conf={"spark.sql.codegen.cache.maxEntries": "64"})
+    assert conf["spark.sql.codegen.cache.maxEntries"] == "64"
