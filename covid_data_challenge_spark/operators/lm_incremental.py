@@ -16,10 +16,10 @@ pattern) —
   Σ_w n_hist·pieces(w) + Σ_w n_batch·pieces(w) = Σ_w n_merged·pieces(w)).
 
 So a new ingest batch never re-derives history: the history statistics
-are published ONCE as mtime-tagged parameter golds under /tmp (the
-media-gold discipline: staleness keyed into the PATH, build in a temp
-dir, one atomic rename — ``operators/media_corpus.atomic_publish_gold``)
-and each batch merges its own, batch-sized deltas into them.
+are published ONCE as parameter golds (:mod:`gold_store` entries keyed on
+the ``hist`` frame's input files and canonical plan, so another history
+names another entry) and each batch merges its own, batch-sized deltas
+into them.
 
 Correctness is the strong form: because count merge is EXACT, the
 incremental rescore is bit-identical to a full refit over
@@ -40,20 +40,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from covid_data_challenge_spark.operators.media_corpus import (
-    atomic_publish_gold,
-    gold_tag,
-)
+from covid_data_challenge_spark import gold_store
 
-#: bump whenever a kernel change alters published gold values (the
-#: media-gold discipline — stragglers reading an old layout would
-#: otherwise silently serve stale derived counts)
+#: bump whenever a kernel change alters published gold values — it is
+#: part of every LM gold key, so entries of the old layout are never read
 LM_GOLD_VERSION = 1
 
 
-def _lm_gold_base(sf_dir: str) -> str:
-    key = sf_dir.strip("/").replace("/", "_")
-    return f"/tmp/spark_graft_lm_v{LM_GOLD_VERSION}/{key}"
+def _lm_gold(family: str, sf_dir: str, hist: DataFrame, build) -> str:
+    """Path of LM gold ``family`` built from ``hist``; ``hist`` must read
+    files (:func:`gold_store.key` refuses in-memory frames)."""
+    k = gold_store.key(family, sf_dir, frames=[hist], version=LM_GOLD_VERSION)
+    return gold_store.load_or_build(k, build)
 
 
 def _ind(c):
@@ -80,8 +78,8 @@ def _probe_gold(gold: DataFrame, keys: DataFrame, key: str) -> DataFrame:
 def kn3_gold_dir(spark: SparkSession, sf_dir: str, hist: DataFrame) -> str:
     """Load-or-build the mod-KN HISTORY gold: the trigram type table
     and every derived model table (contexts, continuation tables,
-    count-of-counts scalars), published atomically under an
-    mtime-tagged directory. The build derives through the SAME
+    count-of-counts scalars), published atomically through
+    :mod:`gold_store`. The build derives through the SAME
     :func:`operators.lm.kn3_model_from_tt` the full refit uses, so the
     gold holds exactly the counts a refit would compute.
 
@@ -98,8 +96,6 @@ def kn3_gold_dir(spark: SparkSession, sf_dir: str, hist: DataFrame) -> str:
         kn3_model_from_tt,
     )
 
-    path = f"{_lm_gold_base(sf_dir)}/kn3-{gold_tag(sf_dir)}.parquet"
-
     def build(tmp: str) -> None:
         tt = (
             doc_trigrams(hist)
@@ -114,11 +110,8 @@ def kn3_gold_dir(spark: SparkSession, sf_dir: str, hist: DataFrame) -> str:
         ctx2.withColumnRenamed("__w2", "w2").write.parquet(f"{tmp}/ctx2")
         uni.withColumnRenamed("__w3", "w3").write.parquet(f"{tmp}/uni")
         coc3.crossJoin(coc2).crossJoin(utot).write.parquet(f"{tmp}/meta")
-        with open(f"{tmp}/_SUCCESS", "w"):
-            pass  # top-level marker: all six sub-tables are complete
 
-    atomic_publish_gold(path, build)
-    return path
+    return _lm_gold("lm_kn3", sf_dir, hist, build)
 
 
 def kn3_incremental_nll(
@@ -350,8 +343,6 @@ def unigram_gold_dir(spark: SparkSession, sf_dir: str, hist: DataFrame) -> str:
         word_dictionary,
     )
 
-    path = f"{_lm_gold_base(sf_dir)}/unigram-{gold_tag(sf_dir)}.parquet"
-
     def build(tmp: str) -> None:
         wd = word_dictionary(hist).localCheckpoint(eager=True)
         seed = seed_vocab(wd).select("piece", "u").localCheckpoint(eager=True)
@@ -363,11 +354,8 @@ def unigram_gold_dir(spark: SparkSession, sf_dir: str, hist: DataFrame) -> str:
         used1.agg(F.sum("vc").cast("long").alias("vt1")).write.parquet(
             f"{tmp}/meta"
         )
-        with open(f"{tmp}/_SUCCESS", "w"):
-            pass
 
-    atomic_publish_gold(path, build)
-    return path
+    return _lm_gold("lm_unigram", sf_dir, hist, build)
 
 
 def unigram_incremental(
@@ -484,8 +472,6 @@ def bpe_gold_dir(spark: SparkSession, sf_dir: str, hist: DataFrame) -> str:
     corpus-sized cost, and it is exactly what this gold amortizes)."""
     from covid_data_challenge_spark.functions.text import tokens as _tokens
 
-    path = f"{_lm_gold_base(sf_dir)}/bpe-{gold_tag(sf_dir)}.parquet"
-
     def build(tmp: str) -> None:
         (
             hist.select(F.explode(_tokens(F.col("text"))).alias("w"))
@@ -493,11 +479,8 @@ def bpe_gold_dir(spark: SparkSession, sf_dir: str, hist: DataFrame) -> str:
             .agg(F.count(F.lit(1)).cast("long").alias("n"))
             .write.parquet(f"{tmp}/wd")
         )
-        with open(f"{tmp}/_SUCCESS", "w"):
-            pass
 
-    atomic_publish_gold(path, build)
-    return path
+    return _lm_gold("lm_bpe", sf_dir, hist, build)
 
 
 def bpe_incremental_merge_table(

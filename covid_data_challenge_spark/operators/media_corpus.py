@@ -6,9 +6,10 @@ tables; the multimodal decode/fingerprint queries ran on fixed-size
 in-query ``synth_*`` tables, so the sf1 tier could not see mapInPandas
 decode throughput at all. This module materializes a deterministic
 parquet corpus of ENCODED media payloads whose item count scales with
-the sf directory (∝ the ``documents`` row count), cached as a gold
-table under /tmp exactly like the IVF-PQ index
-(queries_similarity._pq_gold_load's _SUCCESS + staleness discipline).
+the sf directory (∝ the ``documents`` row count), persisted as a
+:mod:`~covid_data_challenge_spark.gold_store` entry keyed on the
+documents source and ``MEDIA_CORPUS_VERSION`` — like the IVF-PQ index
+and every gold derived from the corpus (:func:`media_gold`).
 
 Corpus layout — ``corpus_item`` is a pure function of (media_id), the
 contract tools/gen_media_golden.py replays for the DuckDB oracle twins:
@@ -49,13 +50,13 @@ brief adds beyond the reference.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
+from covid_data_challenge_spark import gold_store
 from covid_data_challenge_spark.operators.multimodal import (
     AUDIO_FP_BANDS,
     MEDIA_SCHEMA,
@@ -76,12 +77,6 @@ MEDIA_CORPUS_VERSION = 3
 #: sf0.001) at exactly the 48 items the committed goldens replay
 _DOCS_PER_ITEM = 10
 _MIN_ITEMS = 48
-
-#: superseded gold tags younger than this survive one publish cycle so
-#: a concurrent session's lazy plan that resolved the old tag can still
-#: act on it (ADVICE r11 — see _prune_superseded)
-_PRUNE_GRACE_SEC = 600.0
-
 
 def corpus_size(n_docs: int) -> int:
     return max(_MIN_ITEMS, (n_docs // _DOCS_PER_ITEM) // 4 * 4)
@@ -185,32 +180,13 @@ def corpus_item(i: int) -> tuple:
     return (row[0], row[1], bytearray(row[2]), row[3], row[4], row[5], row[6])
 
 
-def _gold_base(sf_dir: str) -> str:
-    key = sf_dir.strip("/").replace("/", "_")
-    return f"/tmp/spark_graft_media_v{MEDIA_CORPUS_VERSION}/{key}"
-
-
-def gold_tag(sf_dir: str) -> str:
-    """The staleness tag (source documents mtime in ms) shared by the
-    corpus gold AND every derived fingerprint gold — exported as the
-    ONE source of truth (VERDICT r10 advisory #1: media_incremental
-    used to re-derive it by string surgery on :func:`_gold_path`'s
-    return, which would silently mis-tag if this naming ever changed)."""
-    src = f"{sf_dir}/documents.parquet"
-    return str(int(os.path.getmtime(src) * 1000) if os.path.exists(src) else 0)
-
-
-def _gold_path(sf_dir: str) -> str:
-    """The gold-table directory for ``sf_dir``, KEYED BY the source
-    documents parquet's mtime — staleness is encoded in the path, so a
-    rebuild never overwrites a directory another session may be
-    reading (VERDICT r9 what's-wrong #3: the old mtime-vs-marker +
-    in-place ``mode("overwrite")`` could interleave with a concurrent
-    session's scan — the same measured race class as the r9 CDC mtime
-    tie). A new source mtime yields a NEW directory; strictly older
-    tags are pruned only AFTER a successful publish (they are only
-    reachable by sessions that already materialized their scans)."""
-    return f"{_gold_base(sf_dir)}/media-{gold_tag(sf_dir)}.parquet"
+def _corpus_key(sf_dir: str) -> gold_store.Key:
+    return gold_store.key(
+        "media_corpus",
+        sf_dir,
+        sources=[f"{sf_dir}/documents.parquet"],
+        version=MEDIA_CORPUS_VERSION,
+    )
 
 
 def build_media_corpus(spark: SparkSession, sf_dir: str, n_items: int) -> DataFrame:
@@ -237,120 +213,28 @@ def build_media_corpus(spark: SparkSession, sf_dir: str, n_items: int) -> DataFr
     return spark.range(0, n_items, 1, n_parts).mapInPandas(batches, MEDIA_SCHEMA)
 
 
-def media_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The cached sf-scaled corpus for ``sf_dir``: build-once gold
-    table, then a plain parquet scan — so the decode queries' timed
-    cost is decode, not synthesis. In production this is the ingest
-    landing table; the build branch never fires on the query path.
-
-    Concurrency contract (r10): the target directory is keyed by the
-    source's mtime (:func:`_gold_path`), the build lands in a unique
-    temp directory, and publication is ONE atomic ``os.rename`` — a
-    reader can only ever see a complete table, and two sessions
-    rebuilding concurrently race only on the rename, where the loser
-    discards its build and scans the winner's identical bytes."""
-    src = f"{sf_dir}/documents.parquet"
-    path = _gold_path(sf_dir)
+def media_corpus_path(spark: SparkSession, sf_dir: str) -> str:
+    """Path of the sf-scaled corpus gold for ``sf_dir``, built on first
+    use (:mod:`~covid_data_challenge_spark.gold_store`: a reader only ever
+    sees a complete table). In production this is the ingest landing
+    table; the build never fires on the query path."""
 
     def build(tmp: str) -> None:
-        n_docs = spark.read.parquet(src).count()
-        build_media_corpus(spark, sf_dir, corpus_size(n_docs)).write.mode(
-            "overwrite"
-        ).parquet(tmp)
+        n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
+        build_media_corpus(spark, sf_dir, corpus_size(n_docs)).write.parquet(tmp)
 
-    atomic_publish_gold(path, build)
-    return spark.read.parquet(path)
+    return gold_store.load_or_build(_corpus_key(sf_dir), build)
 
 
-def atomic_publish_gold(path: str, build) -> None:
-    """Build-once gold publication: if ``path`` lacks a complete table,
-    run ``build(tmp_dir)`` and atomically ``os.rename`` the result into
-    place. A concurrent session racing the rebuild loses only the
-    rename — it discards its (deterministic, identical) build and reads
-    the winner's. Shared by the corpus and the r10 fingerprint golds.
-
-    Failure discipline (ADVICE r10): only a LOST RACE is benign — a
-    rename that fails while the destination still lacks ``_SUCCESS``
-    (EACCES, parent removed, cross-device) is a genuine publish failure
-    and re-raises instead of silently deleting the just-built table and
-    surfacing later as a confusing read-path error. After a successful
-    publish, strictly older-tagged siblings of the same gold family are
-    pruned best-effort (ADVICE r10: every testdata regeneration used to
-    leave a full superseded corpus copy under /tmp forever)."""
-    if os.path.exists(f"{path}/_SUCCESS"):
-        return
-    import shutil
-    import uuid
-
-    tmp = f"{path}.build-{uuid.uuid4().hex}"
-    build(tmp)
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        # Benign ONLY if the destination was actually published by the
-        # race winner — probed with a fresh os.stat of the marker, not
-        # errno alone (an interrupted cleanup can leave a non-empty,
-        # unpublished destination that also fails ENOTEMPTY) and not
-        # os.path.exists (whose result the caller's check-then-act race
-        # window has already proven unreliable once).
-        published = True
-        try:
-            os.stat(f"{path}/_SUCCESS")
-        except OSError:
-            published = False
-        if not published:
-            # genuine publish failure (EACCES, parent removed, stray
-            # partial destination, …) — surface it here instead of as
-            # a confusing read-path error later
-            raise
-    else:
-        _prune_superseded(path)
+def media_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The cached sf-scaled corpus for ``sf_dir`` as a plain parquet scan,
+    so the decode queries' timed cost is decode, not synthesis."""
+    return spark.read.parquet(media_corpus_path(spark, sf_dir))
 
 
-def _prune_superseded(path: str) -> None:
-    """Best-effort removal of STRICTLY older mtime-tagged siblings of a
-    just-published gold directory (``<family>-<tag>.parquet`` under the
-    same base) — ADVICE r10: every testdata regeneration used to leave
-    a full superseded corpus copy under /tmp forever. Tradeoff, stated
-    honestly: an old tag can still be referenced by a concurrent
-    session's LAZY DataFrame (Spark scans at action time), and such a
-    session would now see a FileNotFoundException instead of silently
-    computing over data for a SOURCE FILE VERSION that no longer exists
-    — a loud failure where the old behavior gave a stale answer. New
-    readers always resolve the current tag; ignore_errors keeps an
-    in-flight scan from failing the publisher.
-
-    ADVICE r11: pruning immediately after publish converted that safe
-    cross-session race into a runtime failure — a concurrent session
-    whose lazy DataFrame had already resolved the old tag would hit
-    FileNotFoundException at action time. Old tags now get a GRACE
-    WINDOW: a sibling whose directory mtime is within the last
-    ``_PRUNE_GRACE_SEC`` is skipped this pass (it will be collected by
-    a later publish, by which time any in-flight plan that resolved it
-    has acted or died with its session)."""
-    import re
-    import shutil
-    import time
-
-    base, name = os.path.split(path.rstrip("/"))
-    m = re.match(r"(.+-)(\d+)(\.parquet)$", name)
-    if not m:
-        return
-    fam, tag = m.group(1), int(m.group(2))
-    try:
-        siblings = os.listdir(base)
-    except OSError:
-        return
-    now = time.time()
-    for s in siblings:
-        sm = re.match(r"(.+-)(\d+)(\.parquet)$", s)
-        if sm and sm.group(1) == fam and int(sm.group(2)) < tag:
-            victim = os.path.join(base, s)
-            try:
-                recent = (now - os.path.getmtime(victim)) < _PRUNE_GRACE_SEC
-            except OSError:
-                recent = False  # already vanishing — rmtree is a no-op
-            if recent:
-                continue
-            shutil.rmtree(victim, ignore_errors=True)
+def media_gold(sf_dir: str, name: str, build_df) -> str:
+    """Path of the media gold ``name`` for ``sf_dir``, written from
+    ``build_df()`` on first use. Its key holds the corpus key, so a
+    corpus rebuild names a new entry."""
+    k = gold_store.key(f"media_{name}", sf_dir, corpus=_corpus_key(sf_dir))
+    return gold_store.load_or_build(k, lambda tmp: build_df().write.parquet(tmp))

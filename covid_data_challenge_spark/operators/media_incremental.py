@@ -9,8 +9,8 @@ module adds the production shape for all three modalities:
 
 - **History fingerprint gold tables**: (media_id, phash) for images,
   (media_id, fp) for audio/video — decoded ONCE from the media corpus
-  and published with the same mtime-keyed atomic-rename discipline as
-  the corpus itself (:func:`media_corpus.atomic_publish_gold`). At
+  and published through the same gold store as the corpus itself
+  (:func:`media_corpus.media_gold`, keyed on the corpus key). At
   100 TB this is the index the ingest pipeline maintains; the decode
   cost is paid per item once, at indexing time.
 - **A new-items batch**: synthesized from the pure functions
@@ -42,11 +42,9 @@ from pyspark.sql import functions as F
 
 from covid_data_challenge_spark.operators.media_corpus import (
     _audio_base,
-    _gold_base,
     _video_luma,
-    atomic_publish_gold,
-    gold_tag,
     media_corpus,
+    media_gold,
 )
 from covid_data_challenge_spark.operators.multimodal import (
     MEDIA_SCHEMA,
@@ -143,21 +141,16 @@ def _publish_media_gold(
 ) -> DataFrame:
     """ONE publish + guard implementation for every derived media gold
     (1-D fingerprints AND the r11 tile grid — a second copy of this
-    block already drifted once): build the frame via ``build_df()``,
-    publish atomically beside the corpus gold (same mtime tag via
-    :func:`media_corpus.gold_tag`, so a corpus rebuild invalidates it),
-    then serve plain parquet scans.
+    block already drifted once): build the frame via ``build_df()`` into
+    a gold keyed on the corpus (:func:`media_corpus.media_gold`, so a
+    corpus rebuild invalidates it), then serve plain parquet scans.
 
     Id-namespace guard (ADVICE r10): the batch namespaces (10000+) are
     only disjoint from history ids while the corpus stays under 10000
     items (~400k docs) — asserted here at screen time (one cached max()
     per gold table) instead of silently aliasing a history id and
     corrupting screen results at scales beyond the shipped fixtures."""
-    path = f"{_gold_base(sf_dir)}/{name}-{gold_tag(sf_dir)}.parquet"
-    atomic_publish_gold(
-        path,
-        lambda tmp: build_df().write.mode("overwrite").parquet(tmp),
-    )
+    path = media_gold(sf_dir, name, build_df)
     gold = spark.read.parquet(path)
     if path not in _DISJOINT_OK:
         lim = min(BATCH_BASE.values())
@@ -199,8 +192,8 @@ def tile_phash_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
     Family name ``image_tile_fp8`` (r12): the dual-grid 8-px-hop kernel
     changed every derived word, so the family was RENAMED rather than
     version-bumping MEDIA_CORPUS_VERSION — the surgical equivalent of
-    the bump discipline (an old ``image_tile_fp-<tag>`` dir on disk can
-    never be read by the new code)."""
+    the bump discipline (the family name is part of the gold key, so an
+    old ``image_tile_fp`` entry can never be read by the new code)."""
     from covid_data_challenge_spark.operators.tilehash import tile_phash_table
 
     return _publish_media_gold(

@@ -37,7 +37,6 @@ from __future__ import annotations
 
 import datetime
 import threading
-from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -53,7 +52,7 @@ from covid_data_challenge_spark.operators.cleaning import (
     standardize_keys,
 )
 from covid_data_challenge_spark.operators.joins import key_membership, prefixed
-from covid_data_challenge_spark.sources.readers import file_fingerprint
+from covid_data_challenge_spark.sources.readers import input_fingerprint
 
 #: Country-name harmonization: OWID name → disease.sh API name, applied to
 #: the OWID history source ONLY (the API snapshot keeps its original names).
@@ -286,25 +285,11 @@ _STATE_MEMO: tuple | None = None
 _STATE_LOCK = threading.Lock()
 
 
-def _input_fingerprint(df: DataFrame) -> tuple | None:
-    """:func:`~covid_data_challenge_spark.sources.readers.file_fingerprint`
-    of the files ``df`` reads, or None when it reads none (in-memory or
-    checkpointed frames) or one of them is not on the local file system or
-    cannot be stat'ed."""
-    paths = []
-    for uri in df.inputFiles():
-        parsed = urlparse(uri)
-        if parsed.scheme not in ("", "file"):
-            return None
-        paths.append(unquote(parsed.path))
-    return file_fingerprint(paths)
-
-
 def _checkpointed_state(history: DataFrame, window_days: int) -> DataFrame:
     """The ``localCheckpoint``-ed :func:`history_state`, computed once per
     history version in this process.
 
-    Key: (application id, ``window_days``, :func:`_input_fingerprint` of
+    Key: (application id, ``window_days``, :func:`input_fingerprint` of
     ``history``). A hit also needs ``history.sameSemantics`` of the
     memoised history — same canonical plan — so a changed cleaning rule or
     source misses. A miss computes and replaces the single entry, dropping
@@ -313,7 +298,7 @@ def _checkpointed_state(history: DataFrame, window_days: int) -> DataFrame:
     alone.
     """
     global _STATE_MEMO
-    files = _input_fingerprint(history)
+    files = input_fingerprint(history)
     if files is None:
         return history_state(history, window_days).localCheckpoint()
     key = (history.sparkSession.sparkContext.applicationId, window_days, files)

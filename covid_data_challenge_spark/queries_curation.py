@@ -10,6 +10,9 @@ thematic, not contractual.
 
 from __future__ import annotations
 
+import hashlib
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from covid_data_challenge_spark.functions.text import (
@@ -19,6 +22,7 @@ from covid_data_challenge_spark.functions.text import (
     tokens,
 )
 from covid_data_challenge_spark.operators.dedup import dedup_exact_keep_first
+from covid_data_challenge_spark import gold_store
 from covid_data_challenge_spark.registry import register
 from covid_data_challenge_spark.operators.sampling import md5_unit_fraction_sql
 from covid_data_challenge_spark.operators.bpe import bpe_merge_oracle_sql, bpe_merge_table
@@ -895,82 +899,70 @@ def _lr_oracle(n_buckets: int, iters: int, rate: float) -> str:
 # groupBy(doc_id, y) and residual join on doc_id reads the layout for
 # free — no corpus-scale Exchange per iteration (guide §2.4: bucketed
 # tables persist a partitioning so repeated joins/aggregations on the
-# bucket key skip the shuffle entirely). Same build/serve discipline as
-# the PQ/IVF and LM golds: the build is priced by its own benched leg
-# (lr_feature_gold_build, forced rebuild per run), the fit legs read
-# the published gold (load-or-build on first touch, mtime staleness).
-#
-# Bucket count is scale-parameterized (env, local default 32 — at
-# 100 TB size buckets to the 100 MB-1 GB guide §2.2 band); bucket
-# metadata lives in the session catalog (in-memory), so each session
-# registers the external table over the published files once.
-
-import os as _os
+# bucket key skip the shuffle entirely). The files are a gold_store
+# entry keyed on the documents source and every constant that defines
+# them, the bucket count included, so files bucketed one way are never
+# registered as another. The build is priced by its own benched leg
+# (lr_feature_gold_build, forced rebuild per run); the fit legs read
+# the published entry. Bucket metadata lives in the session catalog
+# (in-memory), so each session registers an external table over the
+# published files once, named after the entry.
 
 _LR_GOLD_VERSION = 1
-_LR_GOLD_BUCKETS = int(_os.environ.get("SPARK_GRAFT_LR_GOLD_BUCKETS", "32"))
+#: local sizing; at 100 TB size buckets to the 100 MB-1 GB guide §2.2 band
+_LR_GOLD_BUCKETS = 32
 
 
-def _lr_gold_base(sf_dir: str) -> str:
-    key = sf_dir.strip("/").replace("/", "_")
-    return f"/tmp/spark_graft_lr_v{_LR_GOLD_VERSION}/{key}"
-
-
-def _lr_gold_table_name(sf_dir: str) -> str:
-    import re
-
-    key = re.sub(r"[^A-Za-z0-9]", "_", sf_dir.strip("/")).lower()
-    return f"lr_feats_gold_{key}_b{_LR_GOLD_BUCKETS}"
-
-
-def _lr_gold_build(spark: SparkSession, sf_dir: str) -> str:
-    """Force-build the bucketed feature gold; returns its data path.
-    One file per bucket (the pre-write repartition uses the same
-    murmur3 pmod as the bucket spec), written sorted by doc_id."""
-    base = _lr_gold_base(sf_dir)
-    name = _lr_gold_table_name(sf_dir)
-    feats = lr_features(
-        _docs(spark, sf_dir),
-        is_target=F.col("source").isin(*_DSIR_TARGET_SOURCES),
-    )
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    (
-        feats.repartition(_LR_GOLD_BUCKETS, F.col("doc_id"))
-        .write.mode("overwrite")
-        .bucketBy(_LR_GOLD_BUCKETS, "doc_id")
-        .sortBy("doc_id")
-        .option("path", f"{base}/feats")
-        .format("parquet")
-        .saveAsTable(name)
-    )
-    return f"{base}/feats"
-
-
-def _lr_feats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The LR feature fact as a bucketed catalog table — load-or-build
-    with the standard marker + source-mtime staleness discipline
-    (_gold_load_or_build's contract). Values are EXACTLY lr_features'
-    output (parquet double roundtrip is exact), so every consumer is
+def _lr_feats(spark: SparkSession, sf_dir: str, rebuild: bool = False) -> DataFrame:
+    """The LR feature fact as a bucketed catalog table over its
+    :mod:`gold_store` entry. Values are EXACTLY lr_features' output
+    (parquet double roundtrip is exact), so every consumer is
     bit-identical to the pre-gold path."""
-    base = _lr_gold_base(sf_dir)
-    name = _lr_gold_table_name(sf_dir)
-    marker = f"{base}/feats/_SUCCESS"
-    src = f"{sf_dir}/documents.parquet"
-    stale = not _os.path.exists(marker) or (
-        _os.path.exists(src)
-        and _os.path.getmtime(src) > _os.path.getmtime(marker)
-    )
-    if stale:
-        _lr_gold_build(spark, sf_dir)
-    elif not spark.catalog.tableExists(name):
-        spark.sql(
-            f"CREATE TABLE {name} "
-            "(doc_id BIGINT, y DOUBLE, bucket INT, x DOUBLE) "
-            "USING PARQUET "
-            f"CLUSTERED BY (doc_id) SORTED BY (doc_id) "
-            f"INTO {_LR_GOLD_BUCKETS} BUCKETS "
-            f"LOCATION '{base}/feats'"
+    buckets = _LR_GOLD_BUCKETS
+
+    def build(tmp: str) -> None:
+        # One file per bucket (the pre-write repartition uses the same
+        # murmur3 pmod as the bucket spec), written sorted by doc_id.
+        # bucketBy writes only through saveAsTable: register a scratch
+        # external table over tmp, and drop it (the files stay).
+        feats = lr_features(
+            _docs(spark, sf_dir),
+            is_target=F.col("source").isin(*_DSIR_TARGET_SOURCES),
         )
+        scratch = f"lr_feats_build_{uuid.uuid4().hex}"
+        try:
+            (
+                feats.repartition(buckets, F.col("doc_id"))
+                .write.bucketBy(buckets, "doc_id")
+                .sortBy("doc_id")
+                .option("path", tmp)
+                .format("parquet")
+                .saveAsTable(scratch)
+            )
+        finally:
+            spark.sql(f"DROP TABLE IF EXISTS {scratch}")
+
+    k = gold_store.key(
+        "lr_feats",
+        sf_dir,
+        sources=[f"{sf_dir}/documents.parquet"],
+        version=_LR_GOLD_VERSION,
+        buckets=buckets,
+        n_buckets=LR_BUCKETS,
+        salt=LR_SALT,
+        target_sources=_DSIR_TARGET_SOURCES,
+    )
+    path = gold_store.load_or_build(k, build, rebuild=rebuild)
+    # named after the entry's full path: one session may meet the same
+    # key under two store roots
+    name = f"lr_feats_gold_{hashlib.sha256(path.encode()).hexdigest()[:24]}"
+    spark.sql(
+        f"CREATE TABLE IF NOT EXISTS {name} "
+        "(doc_id BIGINT, y DOUBLE, bucket INT, x DOUBLE) "
+        "USING PARQUET "
+        f"CLUSTERED BY (doc_id) SORTED BY (doc_id) INTO {buckets} BUCKETS "
+        f"LOCATION '{path}'"
+    )
     return spark.table(name)
 
 
@@ -998,8 +990,7 @@ def q_lr_feature_gold_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fit oracles unroll — hash-checks the persisted artifact, not an
     in-memory intermediate). Per-bucket: row count, distinct docs,
     integer nano-unit x checksum, positive-label count."""
-    _lr_gold_build(spark, sf_dir)
-    feats = _lr_feats(spark, sf_dir)
+    feats = _lr_feats(spark, sf_dir, rebuild=True)
     return feats.groupBy("bucket").agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.countDistinct("doc_id").cast("long").alias("n_docs"),

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from covid_data_challenge_spark.operators.semdedup import semdedup_prune
 from covid_data_challenge_spark.operators.similarity import ann_lsh_topk, cosine_neardup_pairs, cosine_neardup_pairs_lsh, cosine_topk
+from covid_data_challenge_spark import gold_store
 from covid_data_challenge_spark.registry import register
 from covid_data_challenge_spark.queries_shared import (  # noqa: F401
     _emb,
@@ -2390,9 +2391,10 @@ def q_ann_binary_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ann_pq_rerank the bench tier's documented 6.9× outlier.
 # ---------------------------------------------------------------------------
 
-#: bump when the index layout/params change — stale /tmp gold tables
-#: from an older build must never serve a newer query
+#: bump when the index layout/params change, so an entry built by older
+#: code is never served (gold_store key)
 _PQ_GOLD_VERSION = 2
+_PQRES_GOLD_VERSION = 1
 #: production IVF sizing: BOUNDED cell size (nlist ≈ N/cell_target), so
 #: per-batch serve cost — nprobe·cell_target candidates per query — is
 #: flat in corpus size; the build pays the growth instead (a bigger
@@ -2411,70 +2413,72 @@ _PQ_GOLD_TABLES = ("centroids", "codebook", "pq_index")
 _PQ_SERVE_FILTER = "vec_id % 50 = 0 AND vec_id < 3200"
 
 
-def _pq_gold_base(sf_dir: str) -> str:
-    key = sf_dir.strip("/").replace("/", "_")
-    return f"/tmp/spark_graft_pq_gold_v{_PQ_GOLD_VERSION}/{key}"
-
-
-def _pq_gold_build(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the IVF-PQ index gold tables for ``sf_dir`` — the
-    production one-off build cost. The index is partitioned by ``cid``
-    so every probe's equi-join prunes to its nprobe partitions at scan
-    time. Returns the base path."""
-    from covid_data_challenge_spark.operators.pq import ivfpq_build_tables
-
-    base = _pq_gold_base(sf_dir)
-    emb = _emb(spark, sf_dir)
-    centroids, codebook, index = ivfpq_build_tables(
-        emb, n_centroids=_pq_n_centroids(emb.count()), n_sub=32, n_codes=32
+def _pq_gold_key(sf_dir: str, residual: bool) -> gold_store.Key:
+    return gold_store.key(
+        "pqres" if residual else "pq",
+        sf_dir,
+        sources=[f"{sf_dir}/embeddings.parquet"],
+        version=_PQRES_GOLD_VERSION if residual else _PQ_GOLD_VERSION,
+        cell_target=_PQ_CELL_TARGET,
+        n_sub=32,
+        n_codes=32,
     )
-    # codebook/centroids feed the index DAG — persist so Lloyd runs
-    # once across the three writes, then release
-    centroids = centroids.persist()
-    codebook = codebook.persist()
-    try:
-        centroids.write.mode("overwrite").parquet(f"{base}/centroids")
-        codebook.write.mode("overwrite").parquet(f"{base}/codebook")
-        index.write.mode("overwrite").partitionBy("cid").parquet(f"{base}/pq_index")
-    finally:
-        centroids.unpersist()
-        codebook.unpersist()
-    return base
 
 
-def _gold_load_or_build(
-    spark: SparkSession, sf_dir: str, base: str, build_fn
+def _pq_gold(
+    spark: SparkSession, sf_dir: str, residual: bool, rebuild: bool = False
+) -> str:
+    """Path of the IVF-PQ index gold for ``sf_dir`` (raw-vector or
+    residual codes): centroids, codebook and a ``cid``-partitioned code
+    index, so every probe's equi-join prunes to its nprobe partitions at
+    scan time. Built through :mod:`gold_store` on first use; in
+    production the build is a scheduled job and never fires on the
+    serve path."""
+    from covid_data_challenge_spark.operators.pq import (
+        ivfpq_build_tables,
+        ivfpq_residual_build_tables,
+    )
+
+    build_tables = ivfpq_residual_build_tables if residual else ivfpq_build_tables
+
+    def build(tmp: str) -> None:
+        emb = _emb(spark, sf_dir)
+        centroids, codebook, index = build_tables(
+            emb, n_centroids=_pq_n_centroids(emb.count()), n_sub=32, n_codes=32
+        )
+        # centroids/codebook feed the index DAG — persist so the Lloyd and
+        # codebook-training passes run once across the three writes
+        centroids = centroids.persist()
+        codebook = codebook.persist()
+        try:
+            centroids.write.parquet(f"{tmp}/centroids")
+            codebook.write.parquet(f"{tmp}/codebook")
+            index.write.partitionBy("cid").parquet(f"{tmp}/pq_index")
+        finally:
+            centroids.unpersist()
+            codebook.unpersist()
+
+    return gold_store.load_or_build(
+        _pq_gold_key(sf_dir, residual), build, rebuild=rebuild
+    )
+
+
+def _pq_tables(
+    spark: SparkSession, path: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Shared gold-table load-or-build discipline for BOTH PQ index
-    families (raw-vector and residual): every table is checked through
-    its _SUCCESS marker — directory existence alone would serve a
-    crash-mid-write partitioned index (ADVICE r8) — and staleness is
-    judged against pq_index's marker, the table written LAST, so a
-    regenerated testdata dir can never be served by a stale index. In
-    production the build is a scheduled job and these branches never
-    fire on the serve path. One implementation so the next
-    cache-discipline fix cannot silently miss a copy."""
-    import os
-
-    missing = not all(
-        os.path.exists(f"{base}/{t}/_SUCCESS") for t in _PQ_GOLD_TABLES
-    )
-    stale = False
-    if not missing:
-        src = f"{sf_dir}/embeddings.parquet"
-        if os.path.exists(src):
-            stale = os.path.getmtime(src) > os.path.getmtime(
-                f"{base}/pq_index/_SUCCESS"
-            )
-    if missing or stale:
-        build_fn(spark, sf_dir)
-    return tuple(spark.read.parquet(f"{base}/{t}") for t in _PQ_GOLD_TABLES)
+    return tuple(spark.read.parquet(f"{path}/{t}") for t in _PQ_GOLD_TABLES)
 
 
 def _pq_gold_load(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    return _gold_load_or_build(spark, sf_dir, _pq_gold_base(sf_dir), _pq_gold_build)
+    return _pq_tables(spark, _pq_gold(spark, sf_dir, residual=False))
+
+
+def _pqres_gold_load(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    return _pq_tables(spark, _pq_gold(spark, sf_dir, residual=True))
 
 
 @register(
@@ -2506,8 +2510,8 @@ def q_ann_pq_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     checksums), so the oracle — the same two-level training unrolled as
     DuckDB CTEs — hash-checks the persisted artifact end to end, not an
     in-memory intermediate."""
-    base = _pq_gold_build(spark, sf_dir)
-    idx = spark.read.parquet(f"{base}/pq_index")
+    path = _pq_gold(spark, sf_dir, residual=False, rebuild=True)
+    idx = spark.read.parquet(f"{path}/pq_index")
     code_sum = F.aggregate(
         F.col("codes"), F.lit(0).cast("long"), lambda acc, c: acc + c
     )
@@ -2567,7 +2571,7 @@ def q_ann_pq_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     centroids, codebook, index = _pq_gold_load(spark, sf_dir)
     emb = _emb(spark, sf_dir)
-    queries = emb.filter((F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 3200))
+    queries = emb.filter(_PQ_SERVE_FILTER)
     short = ivfpq_serve(
         centroids, codebook, index, queries,
         k=20, nprobe=8, n_sub=32, n_codes=32,
@@ -2735,48 +2739,6 @@ def q_ann_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
 # residual SERVING band beside ann_pq_serve's 1.51–1.85×.
 # ---------------------------------------------------------------------------
 
-_PQRES_GOLD_VERSION = 1
-
-
-def _pqres_gold_base(sf_dir: str) -> str:
-    key = sf_dir.strip("/").replace("/", "_")
-    return f"/tmp/spark_graft_pqres_gold_v{_PQRES_GOLD_VERSION}/{key}"
-
-
-def _pqres_gold_build(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the residual-IVFADC gold tables (centroids, residual
-    codebook, cid-partitioned code index) — the one-off build cost.
-    Returns the base path."""
-    from covid_data_challenge_spark.operators.pq import (
-        ivfpq_residual_build_tables,
-    )
-
-    base = _pqres_gold_base(sf_dir)
-    emb = _emb(spark, sf_dir)
-    centroids, codebook, index = ivfpq_residual_build_tables(
-        emb, n_centroids=_pq_n_centroids(emb.count()), n_sub=32, n_codes=32
-    )
-    # centroids/codebook feed the index DAG — persist so the Lloyd and
-    # codebook-training passes run once across the three writes
-    centroids = centroids.persist()
-    codebook = codebook.persist()
-    try:
-        centroids.write.mode("overwrite").parquet(f"{base}/centroids")
-        codebook.write.mode("overwrite").parquet(f"{base}/codebook")
-        index.write.mode("overwrite").partitionBy("cid").parquet(f"{base}/pq_index")
-    finally:
-        centroids.unpersist()
-        codebook.unpersist()
-    return base
-
-
-def _pqres_gold_load(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    return _gold_load_or_build(
-        spark, sf_dir, _pqres_gold_base(sf_dir), _pqres_gold_build
-    )
-
 
 @register(
     "ann_ivfpq_residual_build",
@@ -2802,8 +2764,8 @@ def q_ann_ivfpq_residual_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression — hash-checks the persisted artifact end to end. Same
     discipline as ann_pq_build; the in-session ann_ivfpq_residual
     composite stays registered as the regression watch."""
-    base = _pqres_gold_build(spark, sf_dir)
-    idx = spark.read.parquet(f"{base}/pq_index")
+    path = _pq_gold(spark, sf_dir, residual=True, rebuild=True)
+    idx = spark.read.parquet(f"{path}/pq_index")
     code_sum = F.aggregate(
         F.col("codes"), F.lit(0).cast("long"), lambda acc, c: acc + c
     )
@@ -2840,7 +2802,7 @@ def q_ann_ivfpq_residual_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     centroids, codebook, index = _pqres_gold_load(spark, sf_dir)
     emb = _emb(spark, sf_dir)
-    queries = emb.filter((F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 3200))
+    queries = emb.filter(_PQ_SERVE_FILTER)
     n_cells = int(centroids.agg(F.max("cid")).collect()[0][0]) + 1
     return ivfpq_residual_serve(
         centroids, codebook, index, queries,
@@ -2867,62 +2829,39 @@ _PQSHORT_GOLD_VERSION = 1
 _PQSHORT_K = 20  # the 4× over-fetch of the final top-5
 
 
-def _pqshort_gold_base(sf_dir: str) -> str:
-    key = sf_dir.strip("/").replace("/", "_")
-    return f"/tmp/spark_graft_pqshort_gold_v{_PQSHORT_GOLD_VERSION}/{key}"
-
-
-def _pqshort_gold_build(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the ADC shortlist gold for the FIXED serving batch:
-    probe the prebuilt IVF-PQ index gold (building it only if absent)
-    at k'=_PQSHORT_K and WRITE (query_id, neighbor_id, adc_distance).
-    Returns the base path. Write discipline deliberately matches the
-    r8 PQ index golds (in-place overwrite + _SUCCESS marker, one
-    session at a time per /tmp) rather than the media golds'
-    mtime-keyed atomic rename — the PQ family's rebuild entries are
-    TIMED as full rebuilds each run, which an exists-skip publish would
-    defeat; the media discipline is the upgrade path if cross-session
-    /tmp sharing ever matters here."""
+def _pqshort_gold(spark: SparkSession, sf_dir: str, rebuild: bool = False) -> str:
+    """Path of the ADC shortlist gold for the FIXED serving batch: the
+    prebuilt IVF-PQ index gold probed at k'=_PQSHORT_K, written as
+    (query_id, neighbor_id, adc_distance). Its :mod:`gold_store` key
+    holds the index gold's key, so a changed index or embeddings source
+    names a new shortlist."""
     from covid_data_challenge_spark.operators.pq import ivfpq_serve
 
-    base = _pqshort_gold_base(sf_dir)
-    centroids, codebook, index = _pq_gold_load(spark, sf_dir)
-    emb = _emb(spark, sf_dir)
-    queries = emb.filter((F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 3200))
-    short = ivfpq_serve(
-        centroids, codebook, index, queries,
-        k=_PQSHORT_K, nprobe=8, n_sub=32, n_codes=32,
+    def build(tmp: str) -> None:
+        centroids, codebook, index = _pq_gold_load(spark, sf_dir)
+        queries = _emb(spark, sf_dir).filter(_PQ_SERVE_FILTER)
+        short = ivfpq_serve(
+            centroids, codebook, index, queries,
+            k=_PQSHORT_K, nprobe=8, n_sub=32, n_codes=32,
+        )
+        short.select("query_id", "neighbor_id", "adc_distance").write.parquet(
+            f"{tmp}/shortlist"
+        )
+
+    k = gold_store.key(
+        "pqshort",
+        sf_dir,
+        version=_PQSHORT_GOLD_VERSION,
+        index=_pq_gold_key(sf_dir, residual=False),
+        k=_PQSHORT_K,
+        nprobe=8,
+        serve_filter=_PQ_SERVE_FILTER,
     )
-    short.select("query_id", "neighbor_id", "adc_distance").write.mode(
-        "overwrite"
-    ).parquet(f"{base}/shortlist")
-    return base
+    return gold_store.load_or_build(k, build, rebuild=rebuild)
 
 
 def _pqshort_gold_load(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Load-or-build for the shortlist gold — the same _SUCCESS-marker
-    + source-mtime staleness discipline as _gold_load_or_build (the
-    shortlist derives from the index, which derives from embeddings, so
-    staleness is judged against the embeddings source). The comparison
-    is ``>=``, not ``>`` — an equal-mtime tie (source regenerated
-    within the same filesystem timestamp granularity as the marker
-    write, the documented r9 'CDC mtime tie' class) must count as
-    stale, at the cost of one redundant rebuild when the tie is
-    benign (ADVICE r11)."""
-    import os
-
-    base = _pqshort_gold_base(sf_dir)
-    marker = f"{base}/shortlist/_SUCCESS"
-    src = f"{sf_dir}/embeddings.parquet"
-    missing = not os.path.exists(marker)
-    stale = (
-        not missing
-        and os.path.exists(src)
-        and os.path.getmtime(src) >= os.path.getmtime(marker)
-    )
-    if missing or stale:
-        _pqshort_gold_build(spark, sf_dir)
-    return spark.read.parquet(f"{base}/shortlist")
+    return spark.read.parquet(f"{_pqshort_gold(spark, sf_dir)}/shortlist")
 
 
 def _exact_cosine_rerank(
@@ -2996,8 +2935,8 @@ def q_ann_pq_rerank_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checks the persisted artifact end to end (the ann_pq_build
     discipline). ADC distances are already round-6 snapped, so the
     micro-scaling is midpoint-free in both engines."""
-    base = _pqshort_gold_build(spark, sf_dir)
-    short = spark.read.parquet(f"{base}/shortlist")
+    path = _pqshort_gold(spark, sf_dir, rebuild=True)
+    short = spark.read.parquet(f"{path}/shortlist")
     return short.groupBy("query_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_candidates"),
         F.sum("neighbor_id").cast("long").alias("neighbor_sum"),
@@ -3053,5 +2992,5 @@ def q_ann_pq_rerank_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     either path."""
     short = _pqshort_gold_load(spark, sf_dir).select("query_id", "neighbor_id")
     emb = _emb(spark, sf_dir)
-    queries = emb.filter((F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 3200))
+    queries = emb.filter(_PQ_SERVE_FILTER)
     return _exact_cosine_rerank(emb, short, queries, k=5)

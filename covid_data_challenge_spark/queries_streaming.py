@@ -1024,8 +1024,7 @@ def q_media_decode_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape: the decode stage is stateless and shuffle-free per
     micro-batch; only the tiny per-kind aggregate carries state."""
     from covid_data_challenge_spark.operators.media_corpus import (
-        _gold_path,
-        media_corpus,
+        media_corpus_path,
     )
     from covid_data_challenge_spark.operators.multimodal import (
         MEDIA_SCHEMA,
@@ -1033,10 +1032,9 @@ def q_media_decode_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from covid_data_challenge_spark.streaming.events import run_to_memory_sink
 
-    media_corpus(spark, sf_dir)  # ensure the gold table exists/is fresh
-    # the r10 mtime-keyed versioned path (the pre-r10 fixed name would
-    # miss the atomically-published directory)
-    stream = spark.readStream.schema(MEDIA_SCHEMA).parquet(_gold_path(sf_dir))
+    stream = spark.readStream.schema(MEDIA_SCHEMA).parquet(
+        media_corpus_path(spark, sf_dir)
+    )
     feats = extract_features(stream, decoder="auto")
     cs = F.coalesce(
         F.aggregate(
@@ -1075,7 +1073,7 @@ def q_media_incremental_phash_screen_stream(
     """STREAMING twin of the incremental pHash media screen (r12 —
     VERDICT r11 next-round #6: the incremental media screens had no
     streaming leg): the synthetic ingest batch lands once as a parquet
-    directory (atomic publish, mtime-tagged beside the other media
+    directory (a gold keyed on the corpus, like the other media
     golds), arrives as Structured Streaming micro-batches, is hashed by
     the SAME Arrow mapInPandas pHash stage, banded by the SAME shared
     band expression (operators/media_incremental.phash_bands — one
@@ -1091,11 +1089,7 @@ def q_media_incremental_phash_screen_stream(
     the broadcast direction decided by the planner; history is never
     re-fingerprinted (the gold is the pre-built index) and never
     self-joined; state is bounded by true collision pairs."""
-    from covid_data_challenge_spark.operators.media_corpus import (
-        _gold_base,
-        atomic_publish_gold,
-        gold_tag,
-    )
+    from covid_data_challenge_spark.operators.media_corpus import media_gold
     from covid_data_challenge_spark.operators.media_incremental import (
         phash_bands,
         phash_gold,
@@ -1109,13 +1103,9 @@ def q_media_incremental_phash_screen_stream(
 
     hist = phash_gold(spark, sf_dir)
     # land the deterministic ingest batch as the stream source (its own
-    # gold family: build-once, atomically published, tag-invalidated)
-    src = f"{_gold_base(sf_dir)}/image_batch_src-{gold_tag(sf_dir)}.parquet"
-    atomic_publish_gold(
-        src,
-        lambda tmp: synth_media_batch(spark, "image")
-        .write.mode("overwrite")
-        .parquet(tmp),
+    # gold family: built once, atomically published)
+    src = media_gold(
+        sf_dir, "image_batch_src", lambda: synth_media_batch(spark, "image")
     )
     stream = spark.readStream.schema(MEDIA_SCHEMA).parquet(src)
     batch = phash_hashes(stream).filter(F.col("decoded"))
@@ -1156,11 +1146,7 @@ def q_media_incremental_image_tile_screen_stream(
     re-resolve per micro-batch), and keeps ONE stateful operator: the
     per-pair best-alignment min_by aggregate. Hash-matches the batch
     twin's committed brute-force golden (hop-grid offsets)."""
-    from covid_data_challenge_spark.operators.media_corpus import (
-        _gold_base,
-        atomic_publish_gold,
-        gold_tag,
-    )
+    from covid_data_challenge_spark.operators.media_corpus import media_gold
     from covid_data_challenge_spark.operators.media_incremental import (
         tile_phash_gold,
     )
@@ -1173,12 +1159,8 @@ def q_media_incremental_image_tile_screen_stream(
     from covid_data_challenge_spark.streaming.events import run_to_memory_sink
 
     hist = tile_phash_gold(spark, sf_dir)
-    src = f"{_gold_base(sf_dir)}/image_tile_batch_src-{gold_tag(sf_dir)}.parquet"
-    atomic_publish_gold(
-        src,
-        lambda tmp: synth_media_tile_batch(spark)
-        .write.mode("overwrite")
-        .parquet(tmp),
+    src = media_gold(
+        sf_dir, "image_tile_batch_src", lambda: synth_media_tile_batch(spark)
     )
     stream = spark.readStream.schema(MEDIA_SCHEMA).parquet(src)
     batch = tile_phash_table(stream).filter(F.col("decoded"))

@@ -23,6 +23,7 @@ import os
 import stat
 import threading
 from collections import OrderedDict
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -70,6 +71,19 @@ def file_fingerprint(paths) -> tuple | None:
             return None
         files.append((path, st.st_size, st.st_mtime_ns))
     return tuple(sorted(files)) or None
+
+
+def input_fingerprint(df: DataFrame) -> tuple | None:
+    """:func:`file_fingerprint` of the files ``df`` reads, or None when it
+    reads none (in-memory or checkpointed frames) or one of them is not on
+    the local file system or cannot be stat'ed."""
+    paths = []
+    for uri in df.inputFiles():
+        parsed = urlparse(uri)
+        if parsed.scheme not in ("", "file"):
+            return None
+        paths.append(unquote(parsed.path))
+    return file_fingerprint(paths)
 
 
 #: Scan catalog bound, in file versions. A registry round reads about ten

@@ -443,13 +443,17 @@ def test_wordpiece_encode_stats_consistency(spark):
     assert wp.n_words == 12
 
 
-def test_corpus_prep_recipe_v5_neardup_prune_and_cluster_split(spark, monkeypatch):
+def test_corpus_prep_recipe_v5_neardup_prune_and_cluster_split(
+    spark, monkeypatch, tmp_path
+):
     """v5 (r7): on a corpus with planted near-duplicate pairs among the
     raw docs, the recipe must (a) keep only the lowest-id survivor per
     near-dup cluster (v4's exact dedup would keep both), (b) assign the
     split on the CLUSTER key, and (c) never emit two docs from one
-    cluster."""
-    import covid_data_challenge_spark.queries_curation as qc
+    cluster. The corpus is a documents table in its own sf directory,
+    because the recipe's LR feature gold is keyed on that file."""
+    import covid_data_challenge_spark.queries_curation  # noqa: F401 — registers it
+    from covid_data_challenge_spark import gold_store
     from covid_data_challenge_spark.registry import REGISTRY
 
     base = ("quantum physics lab experiment with detailed measurement "
@@ -460,11 +464,11 @@ def test_corpus_prep_recipe_v5_neardup_prune_and_cluster_split(spark, monkeypatc
     for i in range(20):  # raw docs: 10 near-dup PAIRS (1-word tweak)
         rows.append((100 + 2 * i, base + f" variant {i}", "en", "raw", 200))
         rows.append((101 + 2 * i, base + f" variant {i} extra", "en", "raw", 200))
-    docs = spark.createDataFrame(
+    spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    monkeypatch.setattr(qc, "_docs", lambda spark, sf: docs)
-    out = REGISTRY["corpus_prep_recipe_v5"].spark(spark, "unused").collect()
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+    monkeypatch.setattr(gold_store, "ROOT", str(tmp_path / "gold"))
+    out = REGISTRY["corpus_prep_recipe_v5"].spark(spark, str(tmp_path)).collect()
     assert out, "the md5 coin kept nothing — fixture needs retuning"
     clusters = [r.cluster_id for r in out]
     assert len(clusters) == len(set(clusters))  # one survivor per cluster

@@ -7,13 +7,30 @@ warm-start-vs-full-refit closeness, and the one-gold-scan plan pins.
 
 from __future__ import annotations
 
-import uuid
-
+import pytest
 from pyspark.sql import functions as F
 
 
 def _mk_docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+@pytest.fixture
+def gold_root(tmp_path, monkeypatch):
+    """The gold store rooted under ``tmp_path``, so a test's golds leave
+    nothing behind."""
+    from covid_data_challenge_spark import gold_store
+
+    monkeypatch.setattr(gold_store, "ROOT", str(tmp_path / "gold"))
+    return tmp_path
+
+
+def _hist_scan(spark, tmp_path):
+    """The history rows as a parquet scan: LM golds key on the files their
+    history frame reads, and refuse in-memory frames."""
+    path = str(tmp_path / "hist.parquet")
+    _mk_docs(spark, _HIST_ROWS).write.parquet(path)
+    return spark.read.parquet(path)
 
 
 #: hand-built corpus with shared words, hist-only words, batch-only
@@ -37,7 +54,7 @@ _BATCH_ROWS = [
 ]
 
 
-def test_kn3_incremental_bit_identical_to_full_refit(spark):
+def test_kn3_incremental_bit_identical_to_full_refit(spark, gold_root):
     """The delta merge is EXACT: incremental scores over the published
     history gold + batch deltas equal the full history∪batch refit
     restricted to batch docs, double-for-double."""
@@ -46,10 +63,10 @@ def test_kn3_incremental_bit_identical_to_full_refit(spark):
         kn3_incremental_nll,
     )
 
-    hist = _mk_docs(spark, _HIST_ROWS)
+    hist = _hist_scan(spark, gold_root)
     batch = _mk_docs(spark, _BATCH_ROWS)
     full = _mk_docs(spark, _HIST_ROWS + _BATCH_ROWS)
-    sf_key = f"/pytest-kn3-{uuid.uuid4().hex}"  # unique gold namespace
+    sf_key = str(gold_root)
 
     got = {
         r.doc_id: r
@@ -69,7 +86,7 @@ def test_kn3_incremental_bit_identical_to_full_refit(spark):
         )
 
 
-def test_unigram_incremental_additivity_and_new_single_floor(spark):
+def test_unigram_incremental_additivity_and_new_single_floor(spark, gold_root):
     """viterbi_count == hist_count + batch_count piece-for-piece, the
     merged counts equal a direct E-step over the MERGED dictionary
     under the same warm vocabulary (the additivity theorem the oracle
@@ -84,10 +101,10 @@ def test_unigram_incremental_additivity_and_new_single_floor(spark):
         word_dictionary,
     )
 
-    hist = _mk_docs(spark, _HIST_ROWS)
+    hist = _hist_scan(spark, gold_root)
     batch = _mk_docs(spark, _BATCH_ROWS)
     full = _mk_docs(spark, _HIST_ROWS + _BATCH_ROWS)
-    sf_key = f"/pytest-uni-{uuid.uuid4().hex}"
+    sf_key = str(gold_root)
 
     out = unigram_incremental(spark, sf_key, hist, batch)
     rows = {r.piece: r for r in out.collect()}
@@ -245,7 +262,7 @@ def test_unigram_incremental_plan_single_usage_scan(spark, sf_dir):
     assert n == 0, f"piece-keyed gold scans in final plan: {n} != 0"
 
 
-def test_bpe_incremental_identical_merge_table(spark):
+def test_bpe_incremental_identical_merge_table(spark, gold_root):
     """Word counts add over disjoint corpora, so the incremental BPE
     leg's merge table equals the full refit's row-for-row (ranks,
     pairs, counts — winners and tie-breaks included)."""
@@ -254,10 +271,10 @@ def test_bpe_incremental_identical_merge_table(spark):
         bpe_incremental_merge_table,
     )
 
-    hist = _mk_docs(spark, _HIST_ROWS)
+    hist = _hist_scan(spark, gold_root)
     batch = _mk_docs(spark, _BATCH_ROWS)
     full = _mk_docs(spark, _HIST_ROWS + _BATCH_ROWS)
-    sf_key = f"/pytest-bpe-{uuid.uuid4().hex}"
+    sf_key = str(gold_root)
 
     got = sorted(
         (r.rank, r.pair, r.cnt)

@@ -344,7 +344,7 @@ def test_merge_memo_invalidated_by_history_rewrite(spark, snapshot, tmp_path):
 
     history = read()
     key, held, _ = covid._STATE_MEMO
-    assert key[2] == covid._input_fingerprint(history)
+    assert key[2] == covid.input_fingerprint(history)
     assert held.sameSemantics(history)
     _, jobs = _spark_jobs(spark, lambda: merge_datasets(history, snap, now=NOW))
     assert jobs == 0
@@ -410,7 +410,7 @@ def test_merge_memo_skips_in_memory_history(spark, snapshot, tmp_path):
     from_file = _merged_rows(merge_datasets(read(), snap, now=NOW))
     held = covid._STATE_MEMO
     in_memory = _memo_history(spark)
-    assert covid._input_fingerprint(in_memory) is None
+    assert covid.input_fingerprint(in_memory) is None
     got, jobs = _spark_jobs(
         spark, lambda: _merged_rows(merge_datasets(clean_history(in_memory), snap, now=NOW))
     )

@@ -13,8 +13,10 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 import covid_data_challenge_spark.queries  # noqa: F401,E402
 import covid_data_challenge_spark.queries_ext  # noqa: F401,E402
@@ -24,7 +26,7 @@ from covid_data_challenge_spark.session import get_spark  # noqa: E402
 
 def documented_queries() -> list[str]:
     # headings may carry a suffix, e.g. "## cms_heavy_hitters (round 2)"
-    heads = re.findall(r"^## (\w+)", open("/root/repo/PLANS.md").read(), re.M)
+    heads = re.findall(r"^## (\w+)", open(REPO / "PLANS.md").read(), re.M)
     return [h for h in heads if h in REGISTRY]
 
 

@@ -21,13 +21,15 @@ from __future__ import annotations
 
 import itertools
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 import pyarrow as pa  # noqa: E402
 import pyarrow.parquet as pq  # noqa: E402
 
-FIXTURE_DIR = "/root/repo/covid_data_challenge_spark/fixtures"
+FIXTURE_DIR = str(REPO / "covid_data_challenge_spark" / "fixtures")
 
 FEATURES_SCHEMA = pa.schema(
     [

@@ -12,10 +12,12 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
-README = "/root/repo/README.md"
+README = REPO / "README.md"
 
 
 def main() -> int:
@@ -51,14 +53,12 @@ def main() -> int:
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "plan_audit_tool", "/root/repo/tools/plan_audit.py"
+        "plan_audit_tool", REPO / "tools" / "plan_audit.py"
     )
     pa = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(pa)
-    plannable = sum(
-        1 for q in REGISTRY if not any(t in q for t in pa._RUNS_OWN_ACTION)
-    )
-    audit = open("/root/repo/PLAN_AUDIT.md").read()
+    plannable = sum(1 for q in REGISTRY if not pa.runs_own_action(q))
+    audit = open(REPO / "PLAN_AUDIT.md").read()
     n_rows = len(re.findall(r"^\| \w+ \| \d+ \|", audit, re.MULTILINE))
     if n_rows != plannable:
         print(

@@ -17,8 +17,10 @@ import argparse
 import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 import covid_data_challenge_spark.queries_ext  # noqa: E402,F401
 from covid_data_challenge_spark.queries import REGISTRY  # noqa: E402

@@ -12,8 +12,10 @@ from __future__ import annotations
 import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from covid_data_challenge_spark.session import get_spark  # noqa: E402
 from covid_data_challenge_spark.testing import (  # noqa: E402
