@@ -245,7 +245,7 @@ def bpe_winner_ctes(norm_expr: str, k: int) -> list[str]:
     aggregates → 1-row winners ``w1..wk`` in sentinel form → rewritten
     dictionaries). Used by both the merge-table and encode oracles."""
     ctes = [
-        f"wc AS (SELECT w, CAST(count(*) AS BIGINT) AS n FROM ("
+        f"wc AS MATERIALIZED (SELECT w, CAST(count(*) AS BIGINT) AS n FROM ("
         f"SELECT unnest(string_split({norm_expr}, ' ')) AS w FROM documents"
         f") GROUP BY w)",
         "idx AS (SELECT CAST(unnest(range(1, 1000)) AS INT) AS i)",
@@ -258,12 +258,12 @@ def bpe_winner_ctes(norm_expr: str, k: int) -> list[str]:
             f"FROM {prev} JOIN idx ON i <= len(w) - 1 GROUP BY 1)"
         )
         ctes.append(
-            f"w{step} AS (SELECT pair, cnt FROM p{step} "
+            f"w{step} AS MATERIALIZED (SELECT pair, cnt FROM p{step} "
             f"ORDER BY cnt DESC, pair LIMIT 1)"
         )
         if step < k:
             ctes.append(
-                f"m{step} AS (SELECT replace(w, (SELECT pair FROM w{step}), "
+                f"m{step} AS MATERIALIZED (SELECT replace(w, (SELECT pair FROM w{step}), "
                 f"chr({step})) AS w, n FROM {prev})"
             )
             prev = f"m{step}"
@@ -540,7 +540,7 @@ def wordpiece_winner_ctes(norm_expr: str, k: int) -> list[str]:
     ``w1..wk`` in sentinel form) — the wordpiece_merge_oracle_sql chain
     factored out so the encode oracle can reuse it."""
     ctes = [
-        f"wc AS (SELECT w, CAST(count(*) AS BIGINT) AS n FROM ("
+        f"wc AS MATERIALIZED (SELECT w, CAST(count(*) AS BIGINT) AS n FROM ("
         f"SELECT unnest(string_split({norm_expr}, ' ')) AS w FROM documents"
         f") GROUP BY w)",
         "idx AS (SELECT CAST(unnest(range(1, 1000)) AS INT) AS i)",
@@ -553,7 +553,7 @@ def wordpiece_winner_ctes(norm_expr: str, k: int) -> list[str]:
             f"FROM {prev} JOIN idx ON i <= len(w) - 1 GROUP BY 1)"
         )
         ctes.append(
-            f"s{step} AS (SELECT substr(w, i, 1) AS sym, "
+            f"s{step} AS MATERIALIZED (SELECT substr(w, i, 1) AS sym, "
             f"CAST(sum(n) AS BIGINT) AS c "
             f"FROM {prev} JOIN idx ON i <= len(w) GROUP BY 1)"
         )
@@ -566,12 +566,12 @@ def wordpiece_winner_ctes(norm_expr: str, k: int) -> list[str]:
             f"JOIN s{step} b ON substr(p.pair, 2, 1) = b.sym)"
         )
         ctes.append(
-            f"w{step} AS (SELECT pair, cnt, score FROM sc{step} "
+            f"w{step} AS MATERIALIZED (SELECT pair, cnt, score FROM sc{step} "
             f"ORDER BY score DESC, pair LIMIT 1)"
         )
         if step < k:
             ctes.append(
-                f"m{step} AS (SELECT replace(w, (SELECT pair FROM w{step}), "
+                f"m{step} AS MATERIALIZED (SELECT replace(w, (SELECT pair FROM w{step}), "
                 f"chr({step})) AS w, n FROM {prev})"
             )
             prev = f"m{step}"

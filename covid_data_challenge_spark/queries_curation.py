@@ -649,7 +649,7 @@ WITH toks0 AS (
            unnest(string_split({_NORM}, ' ')) AS term
     FROM documents
 ),
-bucketed AS (
+bucketed AS MATERIALIZED (
     SELECT doc_id, is_target,
            CAST(
              (CAST(('0x' || substr(md5(term || '{DSIR_SALT}'), 1, 8)) AS BIGINT)
@@ -658,7 +658,7 @@ bucketed AS (
            count(*) AS cnt
     FROM toks0 GROUP BY 1, 2, 3
 ),
-per_bucket AS (
+per_bucket AS MATERIALIZED (
     SELECT bucket,
            sum(CASE WHEN is_target THEN cnt ELSE 0 END) AS ct,
            sum(CASE WHEN NOT is_target THEN cnt ELSE 0 END) AS cr
@@ -683,24 +683,24 @@ docw AS (
     FROM bucketed b JOIN wtab w USING (bucket)
     GROUP BY 1, 2
 ),
-rawdocs AS (SELECT * FROM docw WHERE NOT is_target),
+rawdocs AS MATERIALIZED (SELECT * FROM docw WHERE NOT is_target),
 wthr AS (SELECT quantile_cont(w_units, 0.5) AS thr FROM rawdocs),
 sel AS (
     SELECT doc_id, w_units FROM rawdocs CROSS JOIN wthr
     WHERE CAST(w_units AS DOUBLE) >= thr
 ),
-sel_docs AS (
+sel_docs AS MATERIALIZED (
     SELECT d.doc_id, d.text, d.lang, d.source, s.w_units
     FROM documents d JOIN sel s USING (doc_id)
 ),
 toks AS (SELECT doc_id, string_split({_NORM}, ' ') AS w FROM sel_docs),
-bg AS (
+bg AS MATERIALIZED (
     SELECT doc_id, w[i] || ' ' || w[i + 1] AS bg
     FROM toks JOIN (SELECT CAST(unnest(range(1, 100000)) AS INT) AS i) idx
         ON i <= len(w) - 1
 ),
-lm_bg AS (SELECT bg, count(*) AS c_ab FROM bg GROUP BY bg),
-lm_pre AS (
+lm_bg AS MATERIALIZED (SELECT bg, count(*) AS c_ab FROM bg GROUP BY bg),
+lm_pre AS MATERIALIZED (
     SELECT split_part(bg, ' ', 1) AS pre, CAST(sum(c_ab) AS BIGINT) AS c_a
     FROM lm_bg GROUP BY 1
 ),
@@ -719,14 +719,14 @@ scored AS (
            CAST(floor(1000000.0 * ((l_den) - (l_num))) AS BIGINT) AS nll_units
     FROM lns
 ),
-nlltab AS (
+nlltab AS MATERIALIZED (
     SELECT doc_id,
            CAST(sum(nll_units) AS BIGINT)
              / (CAST(count(*) AS DOUBLE) * 1000000.0) AS nll
     FROM scored GROUP BY doc_id
 ),
 nthr AS (SELECT quantile_cont(nll, 0.75) AS t FROM nlltab),
-fluent AS (
+fluent AS MATERIALIZED (
     SELECT sd.doc_id, sd.text, sd.lang, sd.source, sd.w_units, n.nll
     FROM sel_docs sd JOIN nlltab n USING (doc_id) CROSS JOIN nthr
     WHERE n.nll <= nthr.t
@@ -800,8 +800,10 @@ def q_corpus_prep_recipe_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lr_oracle_parts(n_buckets: int, iters: int, rate: float):
-    ctes = [
+def _lr_feat_ctes(n_buckets: int) -> list[str]:
+    """toks → counts → tf → ``feat``: the hashed l1-normalised term
+    frequencies plus the bias feature, DuckDB twin of lr_features."""
+    return [
         f"""toks AS (
     SELECT doc_id,
            CASE WHEN source IN {_DSIR_TARGET_SOURCES} THEN 1.0 ELSE 0.0 END AS y,
@@ -823,67 +825,79 @@ def _lr_oracle_parts(n_buckets: int, iters: int, rate: float):
              / CAST(sum(cnt) OVER (PARTITION BY doc_id) AS DOUBLE) AS x
     FROM counts
 )""",
-        f"""feat AS (
+        f"""feat AS MATERIALIZED (
     SELECT doc_id, y, bucket, x FROM tf
     UNION ALL
     SELECT DISTINCT doc_id, y, CAST({LR_BIAS} AS INT) AS bucket, 1.0 AS x FROM tf
 )""",
-        "nn AS (SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS n FROM feat)",
-        f"""w0 AS (
-    SELECT CAST(unnest(range({LR_BIAS}, {n_buckets})) AS INT) AS bucket,
-           CAST(0 AS BIGINT) AS w_units
-)""",
     ]
-    for t in range(1, iters + 1):
-        wp = f"w{t - 1}"
-        ctes.append(
-            f"""z{t} AS (
-    SELECT doc_id, y,
+
+
+def _logit_sql(feat: str, weights: str) -> str:
+    """Per-(doc_id, y) logit in integer nano-units under ``weights``."""
+    return f"""SELECT doc_id, y,
            CAST(sum(CAST(floor(1000000000.0
                * (x * (CAST(w_units AS DOUBLE) / 1000000.0))) AS BIGINT))
              AS BIGINT) AS z
-    FROM feat JOIN {wp} USING (bucket) GROUP BY 1, 2
-)"""
-        )
-        ctes.append(
-            f"""p{t} AS (
-    SELECT doc_id, y,
-           (1.0 / (1.0 + {portable_exp_sql("zneg")})) AS p
-    FROM (SELECT doc_id, y,
-                 -(CAST(z AS DOUBLE) / 1000000000.0) AS zneg FROM z{t})
-)"""
-        )
-        ctes.append(
-            f"""g{t} AS (
-    SELECT bucket,
-           CAST(sum(CAST(floor(1000000000.0 * ((p - y) * x)) AS BIGINT))
-             AS BIGINT) AS gsum
-    FROM feat JOIN p{t} USING (doc_id, y) GROUP BY 1
-)"""
-        )
-        ctes.append(
-            f"""w{t} AS (
-    SELECT w.bucket,
-           w.w_units - coalesce(
-               CAST(floor({1000000.0 * rate!r}
-                   * ((CAST(gsum AS DOUBLE) / 1000000000.0)
-                      / CAST(nn.n AS DOUBLE))) AS BIGINT), 0) AS w_units
-    FROM {wp} w LEFT JOIN g{t} USING (bucket) CROSS JOIN nn
-)"""
-        )
-    final = f"""
-SELECT doc_id, y,
-       CAST(sum(CAST(floor(1000000000.0
-           * (x * (CAST(w_units AS DOUBLE) / 1000000.0))) AS BIGINT))
-         AS BIGINT) AS logit_units
-FROM feat JOIN w{iters} USING (bucket) GROUP BY 1, 2
-"""
-    return ctes, final
+    FROM {feat} JOIN {weights} USING (bucket) GROUP BY 1, 2"""
 
 
-def _lr_oracle(n_buckets: int, iters: int, rate: float) -> str:
-    ctes, final = _lr_oracle_parts(n_buckets, iters, rate)
-    return "WITH " + ",\n".join(ctes) + final
+def _gd_cte(out: str, feat: str, init: str, iters: int, rate: float) -> str:
+    """DuckDB twin of operators/lr.lr_train: ``iters`` full-batch GD
+    steps over ``feat`` (doc_id, y, bucket, x) from the ``init``
+    (bucket, w_units) weights, as one recursive CTE whose ``it`` column
+    counts the steps. Every cross-row sum is an integer sum of floored
+    nano-units, so the weights are exact whatever the plan. Exposes the
+    final weights as ``out`` (bucket, w_units)."""
+    return f"""{out} AS MATERIALIZED (
+    WITH RECURSIVE gd(it, bucket, w_units) AS (
+        SELECT 0, bucket, w_units FROM ({init})
+        UNION ALL
+        SELECT w.it + 1, w.bucket,
+               w.w_units - coalesce(
+                   CAST(floor({1000000.0 * rate!r}
+                       * ((CAST(g.gsum AS DOUBLE) / 1000000000.0)
+                          / CAST(nn.n AS DOUBLE))) AS BIGINT), 0)
+        FROM gd w
+        LEFT JOIN (
+            SELECT bucket,
+                   CAST(sum(CAST(floor(1000000000.0 * ((p - y) * x)) AS BIGINT))
+                     AS BIGINT) AS gsum
+            FROM {feat} JOIN (
+                SELECT doc_id, y, (1.0 / (1.0 + {portable_exp_sql("zneg")})) AS p
+                FROM (SELECT doc_id, y, -(CAST(z AS DOUBLE) / 1000000000.0) AS zneg
+                      FROM ({_logit_sql(feat, "gd")}))
+            ) USING (doc_id, y) GROUP BY 1
+        ) g USING (bucket)
+        CROSS JOIN (SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS n FROM {feat}) nn
+        WHERE w.it < {iters}
+    )
+    SELECT bucket, w_units FROM gd WHERE it = {iters}
+)"""
+
+
+#: the trained quality classifier: feature CTEs and its weights ``lrw``
+_LR_CTES = ",\n".join(
+    _lr_feat_ctes(LR_BUCKETS)
+    + [
+        _gd_cte(
+            "lrw",
+            "feat",
+            f"SELECT CAST(unnest(range({LR_BIAS}, {LR_BUCKETS})) AS INT) AS bucket,"
+            " CAST(0 AS BIGINT) AS w_units",
+            LR_ITERS,
+            LR_RATE,
+        )
+    ]
+)
+#: ``_LR_CTES`` plus every document scored: ``scored`` (doc_id, y, logit_units)
+_LR_SCORED_CTES = (
+    _LR_CTES
+    + f""",
+scored AS MATERIALIZED (
+    SELECT doc_id, y, z AS logit_units FROM ({_logit_sql("feat", "lrw")})
+)"""
+)
 
 
 # --- Bucketed LR feature gold (r13, VERDICT r12 next-round #8) -------------
@@ -969,7 +983,7 @@ def _lr_feats(spark: SparkSession, sf_dir: str, rebuild: bool = False) -> DataFr
 @register(
     "lr_feature_gold_build",
     oracle="WITH "
-    + ",\n".join(_lr_oracle_parts(LR_BUCKETS, LR_ITERS, LR_RATE)[0][:4])
+    + ",\n".join(_lr_feat_ctes(LR_BUCKETS))
     + """
 SELECT bucket,
        CAST(count(*) AS BIGINT) AS n_rows,
@@ -987,7 +1001,7 @@ def q_lr_feature_gold_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads exchange-free (the ann_pq_build discipline: the write is
     timed as a full rebuild each run, and the returned summary is read
     back FROM THE WRITTEN TABLE so the oracle — the same feature CTEs
-    the fit oracles unroll — hash-checks the persisted artifact, not an
+    the fit oracles train on — hash-checks the persisted artifact, not an
     in-memory intermediate). Per-bucket: row count, distinct docs,
     integer nano-unit x checksum, positive-label count."""
     feats = _lr_feats(spark, sf_dir, rebuild=True)
@@ -1003,7 +1017,7 @@ def q_lr_feature_gold_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "quality_classifier_logits",
-    oracle=_lr_oracle(LR_BUCKETS, LR_ITERS, LR_RATE),
+    oracle=f"WITH {_LR_SCORED_CTES}\nSELECT * FROM scored",
 )
 def q_quality_classifier_logits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The GPT-3-style curation classifier (Brown et al. 2020, App. A):
@@ -1014,8 +1028,8 @@ def q_quality_classifier_logits(spark: SparkSession, sf_dir: str) -> DataFrame:
     trained weights. Sigmoid runs on functions/pmath.portable_exp and
     every cross-row sum (logits, gradients) is an integer sum of
     floored nano-units, so training AND scoring replay bit-exact in the
-    unrolled DuckDB CTE — a supervised model whose distributed training
-    is hash-checked end to end. Per iteration: one broadcast join + two
+    DuckDB twin (GD as one recursive CTE) — a supervised model whose
+    distributed training is hash-checked end to end. Per iteration: one broadcast join + two
     aggregations over the checkpointed feature table; model state is a
     65-row weight table."""
     feats = _lr_feats(spark, sf_dir)
@@ -1026,9 +1040,8 @@ def q_quality_classifier_logits(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "classifier_eval_auc",
     oracle="WITH "
-    + ",\n".join(_lr_oracle_parts(LR_BUCKETS, LR_ITERS, LR_RATE)[0])
+    + _LR_SCORED_CTES
     + f""",
-scored AS ({_lr_oracle_parts(LR_BUCKETS, LR_ITERS, LR_RATE)[1]}),
 ranked AS (
     SELECT y,
            2 * rank() OVER (ORDER BY logit_units)
@@ -1099,9 +1112,8 @@ def q_classifier_eval_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "classifier_calibration",
     oracle="WITH "
-    + ",\n".join(_lr_oracle_parts(LR_BUCKETS, LR_ITERS, LR_RATE)[0])
+    + _LR_SCORED_CTES
     + f""",
-scored AS ({_lr_oracle_parts(LR_BUCKETS, LR_ITERS, LR_RATE)[1]}),
 probs AS (
     SELECT y,
            (1.0 / (1.0 + {portable_exp_sql("zneg")})) AS p
@@ -1368,10 +1380,10 @@ def q_event_type_drift_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "classifier_top_features",
     oracle="WITH "
-    + ",\n".join(_lr_oracle_parts(LR_BUCKETS, LR_ITERS, LR_RATE)[0])
+    + _LR_CTES
     + f""",
 topw AS (
-    SELECT bucket, w_units FROM w{LR_ITERS}
+    SELECT bucket, w_units FROM lrw
     WHERE bucket <> {LR_BIAS}
     ORDER BY abs(w_units) DESC, bucket LIMIT 5
 ),
@@ -1440,9 +1452,8 @@ def q_classifier_top_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "corpus_prep_recipe_v4",
     oracle="WITH "
-    + ",\n".join(_lr_oracle_parts(LR_BUCKETS, LR_ITERS, LR_RATE)[0])
+    + _LR_SCORED_CTES
     + f""",
-scored AS ({_lr_oracle_parts(LR_BUCKETS, LR_ITERS, LR_RATE)[1]}),
 probs AS (
     SELECT doc_id, y,
            CAST(floor(1000000000.0
@@ -1486,7 +1497,7 @@ def q_corpus_prep_recipe_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
     4. exact dedup — lowest-id survivor per md5 fingerprint.
 
     Every stage replays bit-exactly in the single DuckDB CTE chain:
-    training is the unrolled-GD CTE, the sigmoid is portable_exp, the
+    training is the recursive GD CTE, the sigmoid is portable_exp, the
     coin and fingerprint are md5. Scale: the model is a 65-row weight
     table (checkpointed), scoring is one broadcast join + per-doc agg,
     selection is a map-side filter, dedup is one fingerprint shuffle —
@@ -1530,9 +1541,8 @@ def q_corpus_prep_recipe_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "classifier_eval_pr_auc",
     oracle="WITH "
-    + ",\n".join(_lr_oracle_parts(LR_BUCKETS, LR_ITERS, LR_RATE)[0])
+    + _LR_SCORED_CTES
     + f""",
-scored AS ({_lr_oracle_parts(LR_BUCKETS, LR_ITERS, LR_RATE)[1]}),
 per_val AS (
     SELECT logit_units,
            CAST(count(*) AS BIGINT) AS n,
@@ -1625,9 +1635,8 @@ def q_classifier_eval_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "classifier_threshold_sweep",
     oracle="WITH "
-    + ",\n".join(_lr_oracle_parts(LR_BUCKETS, LR_ITERS, LR_RATE)[0])
+    + _LR_SCORED_CTES
     + f""",
-scored AS ({_lr_oracle_parts(LR_BUCKETS, LR_ITERS, LR_RATE)[1]}),
 probs AS (
     SELECT y,
            CAST(least(floor((1.0 / (1.0 + {portable_exp_sql("zneg")})) * 10.0),
@@ -2081,73 +2090,6 @@ PLATT_ITERS = 3
 PLATT_RATE = 5.0
 
 
-def _platt_ctes(iters: int, rate: float) -> list[str]:
-    """Calibration GD loop as prefixed CTEs over the base-LR ``scored``
-    table: a 2-parameter logistic regression (slope on the base logit,
-    intercept) through the identical integer-quantized update rule as
-    _lr_oracle_parts — textual twin with c-prefixed names so both
-    loops coexist in one WITH chain."""
-    ctes = [
-        """cfeat AS MATERIALIZED (
-    SELECT doc_id, y, CAST(0 AS INT) AS bucket,
-           CAST(logit_units AS DOUBLE) / 1000000000.0 AS x
-    FROM scored
-    UNION ALL
-    SELECT doc_id, y, CAST(-1 AS INT) AS bucket, 1.0 AS x FROM scored
-)""",
-        "cnn AS (SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS n FROM cfeat)",
-        """cw0(bucket, w_units) AS (VALUES (CAST(0 AS INT), CAST(1000000 AS BIGINT)),
-                             (CAST(-1 AS INT), CAST(0 AS BIGINT)))""",
-    ]
-    for t in range(1, iters + 1):
-        wp = f"cw{t - 1}"
-        ctes.append(
-            f"""cz{t} AS (
-    SELECT doc_id, y,
-           CAST(sum(CAST(floor(1000000000.0
-               * (x * (CAST(w_units AS DOUBLE) / 1000000.0))) AS BIGINT))
-             AS BIGINT) AS z
-    FROM cfeat JOIN {wp} USING (bucket) GROUP BY 1, 2
-)"""
-        )
-        ctes.append(
-            f"""cp{t} AS (
-    SELECT doc_id, y,
-           (1.0 / (1.0 + {portable_exp_sql("zneg")})) AS p
-    FROM (SELECT doc_id, y,
-                 -(CAST(z AS DOUBLE) / 1000000000.0) AS zneg FROM cz{t})
-)"""
-        )
-        ctes.append(
-            f"""cg{t} AS (
-    SELECT bucket,
-           CAST(sum(CAST(floor(1000000000.0 * ((p - y) * x)) AS BIGINT))
-             AS BIGINT) AS gsum
-    FROM cfeat JOIN cp{t} USING (doc_id, y) GROUP BY 1
-)"""
-        )
-        ctes.append(
-            f"""cw{t} AS (
-    SELECT w.bucket,
-           w.w_units - coalesce(
-               CAST(floor({1000000.0 * rate!r}
-                   * ((CAST(gsum AS DOUBLE) / 1000000000.0)
-                      / CAST(cnn.n AS DOUBLE))) AS BIGINT), 0) AS w_units
-    FROM {wp} w LEFT JOIN cg{t} USING (bucket) CROSS JOIN cnn
-)"""
-        )
-    ctes.append(
-        f"""czf AS MATERIALIZED (
-    SELECT doc_id, y,
-           CAST(sum(CAST(floor(1000000000.0
-               * (x * (CAST(w_units AS DOUBLE) / 1000000.0))) AS BIGINT))
-             AS BIGINT) AS cal_units
-    FROM cfeat JOIN cw{iters} USING (bucket) GROUP BY 1, 2
-)"""
-    )
-    return ctes
-
-
 _PLATT_LN_STAGE, _PLATT_LN_FINAL = portable_ln_sql_stages(
     {"l_cal": "arg_cal", "l_raw": "arg_raw"}
 )
@@ -2156,16 +2098,28 @@ _PLATT_LN_STAGE, _PLATT_LN_FINAL = portable_ln_sql_stages(
 @register(
     "platt_scaling_fit",
     oracle="WITH "
-    + ",\n".join(_lr_oracle_parts(LR_BUCKETS, LR_ITERS, LR_RATE)[0])
-    # MATERIALIZED is load-bearing: the calibration chain references
-    # scored/cfeat many times, and DuckDB's default CTE inlining would
-    # re-expand the full base-GD unroll at every reference (measured as
-    # a multi-minute hang at sf0.001; materialized it runs in seconds)
-    + f""",
-scored AS MATERIALIZED ({_lr_oracle_parts(LR_BUCKETS, LR_ITERS, LR_RATE)[1]}),
+    + _LR_SCORED_CTES
+    + """,
+cfeat AS MATERIALIZED (
+    SELECT doc_id, y, CAST(0 AS INT) AS bucket,
+           CAST(logit_units AS DOUBLE) / 1000000000.0 AS x
+    FROM scored
+    UNION ALL
+    SELECT doc_id, y, CAST(-1 AS INT) AS bucket, 1.0 AS x FROM scored
+),
 """
-    + ",\n".join(_platt_ctes(PLATT_ITERS, PLATT_RATE))
+    + _gd_cte(
+        "cw",
+        "cfeat",
+        "SELECT * FROM (VALUES (CAST(0 AS INT), CAST(1000000 AS BIGINT)),"
+        " (CAST(-1 AS INT), CAST(0 AS BIGINT))) t(bucket, w_units)",
+        PLATT_ITERS,
+        PLATT_RATE,
+    )
     + f""",
+czf AS MATERIALIZED (
+    SELECT doc_id, y, z AS cal_units FROM ({_logit_sql("cfeat", "cw")})
+),
 sl AS (
     SELECT s.doc_id, s.y,
            CASE WHEN s.y = 1.0 THEN -(CAST(c.cal_units AS DOUBLE) / 1000000000.0)
@@ -2188,8 +2142,8 @@ lunits AS (
            CAST(floor(1000000.0 * (l_raw)) AS BIGINT) AS u_raw
     FROM lns2
 )
-SELECT (SELECT w_units FROM cw{PLATT_ITERS} WHERE bucket = 0) AS a_units,
-       (SELECT w_units FROM cw{PLATT_ITERS} WHERE bucket = -1) AS b_units,
+SELECT (SELECT w_units FROM cw WHERE bucket = 0) AS a_units,
+       (SELECT w_units FROM cw WHERE bucket = -1) AS b_units,
        CAST(count(*) AS BIGINT) AS n_docs,
        CAST(sum(u_raw) AS BIGINT)
          / (CAST(count(*) AS DOUBLE) * 1000000.0) AS nll_raw,
@@ -2207,7 +2161,8 @@ def q_platt_scaling_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     with one feature bucket = the base logit, plus intercept), so the
     calibrated model — and the held-out-style log-loss comparison
     nll_raw vs nll_cal reported beside it — replays hash-exactly in one
-    DuckDB CTE chain: base training unroll, calibration unroll, then
+    DuckDB CTE chain: base training, calibration (one recursive GD CTE
+    builder serves both), then
     portable-exp/ln log-losses in integer micro-nats. The fit starts AT
     the identity (a=1, b=0 — the raw model) and refines; on this
     self-trained corpus the base model is already slope-calibrated, so
@@ -2978,9 +2933,8 @@ def q_wordpiece_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "classifier_ece",
     oracle="WITH "
-    + ",\n".join(_lr_oracle_parts(LR_BUCKETS, LR_ITERS, LR_RATE)[0])
+    + _LR_SCORED_CTES
     + f""",
-scored AS ({_lr_oracle_parts(LR_BUCKETS, LR_ITERS, LR_RATE)[1]}),
 probs AS (
     SELECT y,
            (1.0 / (1.0 + {portable_exp_sql("zneg")})) AS p
@@ -3091,9 +3045,8 @@ def _v5_oracle() -> str:
     splits = {"train": 0.8, "val": 0.1, "test": 0.1}
     return (
         "WITH RECURSIVE "
-        + ",\n".join(_lr_oracle_parts(LR_BUCKETS, LR_ITERS, LR_RATE)[0])
+        + _LR_SCORED_CTES
         + f""",
-scored AS ({_lr_oracle_parts(LR_BUCKETS, LR_ITERS, LR_RATE)[1]}),
 probs AS (
     SELECT doc_id, y,
            CAST(floor(1000000000.0
@@ -3143,7 +3096,7 @@ def q_corpus_prep_recipe_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
        split_leakage_audit's zero-leak-by-construction policy.
 
     Output: (doc_id, lang, source, p_units, cluster_id, split) — the
-    release table. Every stage replays in ONE DuckDB chain: unrolled GD,
+    release table. Every stage replays in ONE DuckDB chain: recursive GD,
     portable-exp sigmoid, md5 coin, shingle/Jaccard edges over the KEPT
     subset (the parameterized jaccard_edge_ctes — clustering only what
     survived the gate, which is also the 100 TB order: the cheap gate

@@ -1802,35 +1802,73 @@ def q_theil_sen_trends_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "seasonal_decomposition",
-    oracle="""
-WITH daily AS (
+#: the per-type daily event counts the decomposition family reads
+_DAILY_SQL = """WITH daily AS (
     SELECT event_type, CAST(ts AS DATE) AS day,
            CAST(count(*) AS BIGINT) AS x
     FROM events GROUP BY 1, 2
-),
-tr AS (
+)"""
+
+#: DuckDB twin of _seasonal_frame over a ``daily`` (event_type, day, x)
+#: CTE, exposing ``dec``. Trend, seasonal index and residual are integer
+#: micro-units (half-up means), so no value depends on a summation order.
+_SEASONAL_CTES = """tr AS (
     SELECT event_type, day, x,
            CASE WHEN count(*) OVER w = 7
-                THEN round(avg(CAST(x AS DOUBLE)) OVER w, 6) END AS trend
+                THEN CAST((2000000 * sum(x) OVER w + 7) // 14 AS BIGINT) END
+             AS trend_u
     FROM daily
     WINDOW w AS (PARTITION BY event_type ORDER BY day
                  ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)
 ),
 detr AS (
     SELECT *, CAST(strftime(day, '%w') AS INT) AS dow,
-           CAST(x AS DOUBLE) - trend AS d
+           x * 1000000 - trend_u AS d_u
     FROM tr
 ),
 seas AS (
-    SELECT event_type, dow, round(avg(d), 6) AS seasonal
-    FROM detr WHERE d IS NOT NULL GROUP BY 1, 2
+    SELECT event_type, dow,
+           CAST(sign(sum(d_u)) * ((2 * abs(sum(d_u)) + count(*)) // (2 * count(*)))
+             AS BIGINT) AS seasonal_u
+    FROM detr WHERE d_u IS NOT NULL GROUP BY 1, 2
+),
+dec AS (
+    SELECT t.event_type, t.day, t.x,
+           CAST(t.trend_u AS DOUBLE) / 1000000.0 AS trend,
+           CAST(s.seasonal_u AS DOUBLE) / 1000000.0 AS seasonal,
+           CAST(t.d_u - s.seasonal_u AS DOUBLE) / 1000000.0 AS residual
+    FROM detr t LEFT JOIN seas s
+      ON t.event_type = s.event_type AND t.dow = s.dow AND t.d_u IS NOT NULL
+)"""
+
+#: DuckDB twin of _hampel_flags over ``dec``
+_HAMPEL_SQL = """resid AS (
+    SELECT event_type, day, x, residual AS r FROM dec WHERE residual IS NOT NULL
+),
+med AS (
+    SELECT event_type, quantile_cont(r, 0.5) AS med FROM resid GROUP BY 1
+),
+dev AS (
+    SELECT r.event_type, r.day, r.x, r.r, m.med,
+           round(abs(r.r - m.med), 6) AS ad
+    FROM resid r JOIN med m USING (event_type)
+),
+mad AS (
+    SELECT event_type, quantile_cont(ad, 0.5) AS mad FROM dev GROUP BY 1
 )
-SELECT t.event_type, t.day, t.x, t.trend, s.seasonal,
-       round(t.d - s.seasonal, 6) AS residual
-FROM detr t LEFT JOIN seas s
-  ON t.event_type = s.event_type AND t.dow = s.dow AND t.d IS NOT NULL
+SELECT d.event_type, d.day, d.x, d.r AS residual,
+       round((d.r - d.med) / (1.4826 * m.mad), 6) AS robust_z
+FROM dev d JOIN mad m USING (event_type)
+WHERE m.mad > 0 AND abs(d.r - d.med) > 3 * 1.4826 * m.mad
+"""
+
+
+@register(
+    "seasonal_decomposition",
+    oracle=f"""
+{_DAILY_SQL},
+{_SEASONAL_CTES}
+SELECT * FROM dec
 """,
 )
 def q_seasonal_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1841,9 +1879,9 @@ def q_seasonal_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     day-of-week mean of the detrended series, residual = what's left —
     the series-health view that separates 'weekends are quiet' from
     'something broke on the 14th'. Determinism: integer daily counts;
-    the trend snaps round-6 BEFORE detrending and the seasonal index
-    before the residual (each stage's floats are reproducible
-    sum/count divisions over integers); day-of-week is the explicit
+    trend, seasonal index and residual are integer micro-units (half-up
+    integer means), exact whatever order either engine sums in, and
+    are divided by 1e6 once, for output; day-of-week is the explicit
     %w convention on both engines (Sunday = 0). Scale shape: one
     fact-table aggregation; every window partitions by event_type over
     a bounded day series — no global window, no self-join."""
@@ -1853,9 +1891,11 @@ def q_seasonal_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _seasonal_frame(
     spark: SparkSession, sf_dir: str, plant_spike: bool = False
 ) -> DataFrame:
-    """The seasonal-decomposition pipeline (expressions verbatim from
-    the r8 original so its audited plan is unchanged); shared with the
-    r9 robust-anomaly query. ``plant_spike`` multiplies each type's
+    """The seasonal-decomposition pipeline, shared with the r9
+    robust-anomaly query. Trend, seasonal index and residual are
+    integer micro-units (half-up means: the 7-day trend, and the
+    day-of-week mean rounded half away from zero), so no value depends
+    on the order a sum is taken in. ``plant_spike`` multiplies each type's
     day-10 count by 8 BEFORE decomposition — the deterministic anomaly
     injection the r10 planted twin uses to make its oracle gate
     discriminating (the default path's plan is untouched)."""
@@ -1881,92 +1921,60 @@ def _seasonal_frame(
         "event_type",
         "day",
         "x",
+        F.count(F.lit(1)).over(w).alias("__n"),
+        F.sum("x").over(w).alias("__s"),
+    ).select(
+        "event_type",
+        "day",
+        "x",
         F.when(
-            F.count(F.lit(1)).over(w) == 7,
-            F.round(F.avg(F.col("x").cast("double")).over(w), 6),
-        ).alias("trend"),
+            F.col("__n") == 7, F.expr("(2000000 * __s + 7) div 14")
+        ).alias("__trend_u"),
     )
     detr = tr.select(
         "*",
         (F.dayofweek("day") - 1).cast("int").alias("dow"),
-        (F.col("x").cast("double") - F.col("trend")).alias("d"),
+        (F.col("x") * 1000000 - F.col("__trend_u")).alias("__d_u"),
     )
     seas = (
-        detr.filter(F.col("d").isNotNull())
+        detr.filter(F.col("__d_u").isNotNull())
         .groupBy("event_type", "dow")
-        .agg(F.round(F.avg("d"), 6).alias("seasonal"))
+        .agg(F.sum("__d_u").alias("__s"), F.count(F.lit(1)).alias("__n"))
+        .select(
+            F.col("event_type").alias("__et"),
+            F.col("dow").alias("__dow"),
+            (
+                F.signum("__s").cast("long")
+                * F.expr("(2 * abs(__s) + __n) div (2 * __n)")
+            ).alias("__seasonal_u"),
+        )
     )
-    seas2 = seas.select(
-        F.col("event_type").alias("__et"),
-        F.col("dow").alias("__dow"),
-        "seasonal",
-    )
+    micro = lambda c: c.cast("double") / F.lit(1e6)  # noqa: E731
     return (
         detr.join(
-            F.broadcast(seas2),
+            F.broadcast(seas),
             (F.col("event_type") == F.col("__et"))
             & (F.col("dow") == F.col("__dow"))
-            & F.col("d").isNotNull(),
+            & F.col("__d_u").isNotNull(),
             "left",
         )
         .select(
             "event_type",
             "day",
             "x",
-            "trend",
-            "seasonal",
-            F.round(F.col("d") - F.col("seasonal"), 6).alias("residual"),
+            micro(F.col("__trend_u")).alias("trend"),
+            micro(F.col("__seasonal_u")).alias("seasonal"),
+            micro(F.col("__d_u") - F.col("__seasonal_u")).alias("residual"),
         )
     )
 
 
 @register(
     "robust_anomaly_days",
-    oracle="""
-WITH daily AS (
-    SELECT event_type, CAST(ts AS DATE) AS day,
-           CAST(count(*) AS BIGINT) AS x
-    FROM events GROUP BY 1, 2
-),
-tr AS (
-    SELECT event_type, day, x,
-           CASE WHEN count(*) OVER w = 7
-                THEN round(avg(CAST(x AS DOUBLE)) OVER w, 6) END AS trend
-    FROM daily
-    WINDOW w AS (PARTITION BY event_type ORDER BY day
-                 ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)
-),
-detr AS (
-    SELECT *, CAST(strftime(day, '%w') AS INT) AS dow,
-           CAST(x AS DOUBLE) - trend AS d
-    FROM tr
-),
-seas AS (
-    SELECT event_type, dow, round(avg(d), 6) AS seasonal
-    FROM detr WHERE d IS NOT NULL GROUP BY 1, 2
-),
-resid AS (
-    SELECT t.event_type, t.day, t.x,
-           round(t.d - s.seasonal, 6) AS r
-    FROM detr t JOIN seas s
-      ON t.event_type = s.event_type AND t.dow = s.dow AND t.d IS NOT NULL
-),
-med AS (
-    SELECT event_type, quantile_cont(r, 0.5) AS med FROM resid GROUP BY 1
-),
-dev AS (
-    SELECT r.event_type, r.day, r.x, r.r, m.med,
-           round(abs(r.r - m.med), 6) AS ad
-    FROM resid r JOIN med m USING (event_type)
-),
-mad AS (
-    SELECT event_type, quantile_cont(ad, 0.5) AS mad FROM dev GROUP BY 1
-)
-SELECT d.event_type, d.day, d.x, d.r AS residual,
-       round((d.r - d.med) / (1.4826 * m.mad), 6) AS robust_z
-FROM dev d JOIN mad m USING (event_type)
-WHERE m.mad > 0 AND abs(d.r - d.med) > 3 * 1.4826 * m.mad
-""",
+    oracle=f"""
+{_DAILY_SQL},
+{_SEASONAL_CTES},
+{_HAMPEL_SQL}""",
 )
 def q_robust_anomaly_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust anomaly days (r9): flag days whose seasonal-decomposition
@@ -2034,7 +2042,7 @@ def _hampel_flags(frame: DataFrame) -> DataFrame:
 
 @register(
     "robust_anomaly_days_planted",
-    oracle="""
+    oracle=f"""
 WITH daily0 AS (
     SELECT event_type, CAST(ts AS DATE) AS day,
            CAST(count(*) AS BIGINT) AS x
@@ -2047,45 +2055,8 @@ daily AS (
                 THEN d.x * 8 ELSE d.x END AS x
     FROM daily0 d JOIN t0 t USING (event_type)
 ),
-tr AS (
-    SELECT event_type, day, x,
-           CASE WHEN count(*) OVER w = 7
-                THEN round(avg(CAST(x AS DOUBLE)) OVER w, 6) END AS trend
-    FROM daily
-    WINDOW w AS (PARTITION BY event_type ORDER BY day
-                 ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)
-),
-detr AS (
-    SELECT *, CAST(strftime(day, '%w') AS INT) AS dow,
-           CAST(x AS DOUBLE) - trend AS d
-    FROM tr
-),
-seas AS (
-    SELECT event_type, dow, round(avg(d), 6) AS seasonal
-    FROM detr WHERE d IS NOT NULL GROUP BY 1, 2
-),
-resid AS (
-    SELECT t.event_type, t.day, t.x,
-           round(t.d - s.seasonal, 6) AS r
-    FROM detr t JOIN seas s
-      ON t.event_type = s.event_type AND t.dow = s.dow AND t.d IS NOT NULL
-),
-med AS (
-    SELECT event_type, quantile_cont(r, 0.5) AS med FROM resid GROUP BY 1
-),
-dev AS (
-    SELECT r.event_type, r.day, r.x, r.r, m.med,
-           round(abs(r.r - m.med), 6) AS ad
-    FROM resid r JOIN med m USING (event_type)
-),
-mad AS (
-    SELECT event_type, quantile_cont(ad, 0.5) AS mad FROM dev GROUP BY 1
-)
-SELECT d.event_type, d.day, d.x, d.r AS residual,
-       round((d.r - d.med) / (1.4826 * m.mad), 6) AS robust_z
-FROM dev d JOIN mad m USING (event_type)
-WHERE m.mad > 0 AND abs(d.r - d.med) > 3 * 1.4826 * m.mad
-""",
+{_SEASONAL_CTES},
+{_HAMPEL_SQL}""",
 )
 def q_robust_anomaly_days_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """robust_anomaly_days with a DETERMINISTIC planted anomaly (r10 —

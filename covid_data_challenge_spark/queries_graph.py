@@ -15,53 +15,39 @@ from covid_data_challenge_spark.registry import register
 from covid_data_challenge_spark.sources.readers import load_table
 
 
+_PAGERANK_ITERS = 3
+
+
 @register(
     "part_pagerank",
-    oracle="""
+    oracle=f"""
 WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-edges AS (
+edges AS MATERIALIZED (
   SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
   FROM items a JOIN items b
     ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
 ),
-deg AS (SELECT src, count(*) AS d FROM edges GROUP BY src),
-n AS (SELECT count(*) AS n FROM deg),
-pr0 AS (SELECT src AS node, CAST(1.0 AS DOUBLE) / n.n AS rank FROM deg, n),
-it1 AS (
-  SELECT d.src AS node,
-         round(CAST(0.15 AS DOUBLE) / n.n
-               + CAST(0.85 AS DOUBLE) * coalesce(c.s, 0), 9) AS rank
-  FROM deg d CROSS JOIN n
-  LEFT JOIN (
-    SELECT e.dst, sum(p.rank / dg.d) AS s
-    FROM edges e JOIN pr0 p ON e.src = p.node JOIN deg dg ON e.src = dg.src
-    GROUP BY e.dst
-  ) c ON c.dst = d.src
-),
-it2 AS (
-  SELECT d.src AS node,
-         round(CAST(0.15 AS DOUBLE) / n.n
-               + CAST(0.85 AS DOUBLE) * coalesce(c.s, 0), 9) AS rank
-  FROM deg d CROSS JOIN n
-  LEFT JOIN (
-    SELECT e.dst, sum(p.rank / dg.d) AS s
-    FROM edges e JOIN it1 p ON e.src = p.node JOIN deg dg ON e.src = dg.src
-    GROUP BY e.dst
-  ) c ON c.dst = d.src
-),
-it3 AS (
-  SELECT d.src AS node,
-         round(CAST(0.15 AS DOUBLE) / n.n
-               + CAST(0.85 AS DOUBLE) * coalesce(c.s, 0), 9) AS rank
-  FROM deg d CROSS JOIN n
-  LEFT JOIN (
-    SELECT e.dst, sum(p.rank / dg.d) AS s
-    FROM edges e JOIN it2 p ON e.src = p.node JOIN deg dg ON e.src = dg.src
-    GROUP BY e.dst
-  ) c ON c.dst = d.src
+deg AS MATERIALIZED (SELECT src, count(*) AS d FROM edges GROUP BY src),
+n AS MATERIALIZED (SELECT count(*) AS n FROM deg),
+pr AS MATERIALIZED (
+  WITH RECURSIVE it(i, node, rank) AS (
+    SELECT 0, src, CAST(1.0 AS DOUBLE) / n.n FROM deg, n
+    UNION ALL
+    SELECT d.i + 1, d.node,
+           round(CAST(0.15 AS DOUBLE) / n.n
+                 + CAST(0.85 AS DOUBLE) * coalesce(c.s, 0), 9)
+    FROM it d CROSS JOIN n
+    LEFT JOIN (
+      SELECT e.dst, sum(p.rank / dg.d) AS s
+      FROM edges e JOIN it p ON e.src = p.node JOIN deg dg ON e.src = dg.src
+      GROUP BY e.dst
+    ) c ON c.dst = d.node
+    WHERE d.i < {_PAGERANK_ITERS}
+  )
+  SELECT node, rank FROM it WHERE i = {_PAGERANK_ITERS}
 )
 SELECT node AS part, round(rank, 6) AS rank
-FROM it3 ORDER BY rank DESC, node LIMIT 20
+FROM pr ORDER BY rank DESC, node LIMIT 20
 """,
 )
 def q_part_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -70,7 +56,7 @@ def q_part_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     showcase alongside connected components. Each iteration is one
     edges⋈ranks equi-join + one per-dst aggregation; ranks snap to a
     1e-9 grid per iteration so the partition-order float jitter can't
-    diverge from the DuckDB unrolled-CTE oracle
+    diverge from the DuckDB recursive-CTE oracle
     (operators/graph.py:pagerank)."""
     from covid_data_challenge_spark.operators.graph import pagerank
 
@@ -103,7 +89,9 @@ def q_part_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parts are a catalog dimension (bounded by schema, not SF), so the
     # 20k-row rank table broadcasts and the 2.4M-row edge list is never
     # shuffled inside the loop — measured ~2x per iteration at sf0.1
-    ranks = pagerank(edges, iters=3, damping=0.85, broadcast_ranks=True)
+    ranks = pagerank(
+        edges, iters=_PAGERANK_ITERS, damping=0.85, broadcast_ranks=True
+    )
     return (
         ranks.select(F.col("node").alias("part"), F.round("rank", 6).alias("rank"))
         .orderBy(F.col("rank").desc(), "part")
@@ -287,41 +275,28 @@ _KCORE_K, _KCORE_ROUNDS = 3, 3
 
 
 def _kcore_oracle(k: int, rounds: int) -> str:
-    ctes = [
-        """items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)""",
-        """e0 AS (
-  SELECT a.l_partkey AS a, b.l_partkey AS b
-  FROM items a JOIN items b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2 HAVING count(*) >= 2
-)""",
-    ]
-    prev = "e0"
-    for r in range(1, rounds + 1):
-        ctes.append(
-            f"""d{r} AS (
-  SELECT node, count(*) AS deg FROM (
-    SELECT a AS node FROM {prev} UNION ALL SELECT b AS node FROM {prev}
-  ) GROUP BY 1
-)"""
-        )
-        ctes.append(f"k{r} AS (SELECT node FROM d{r} WHERE deg >= {k})")
-        ctes.append(
-            f"""e{r} AS (
-  SELECT e.a, e.b FROM {prev} e
-  WHERE e.a IN (SELECT node FROM k{r}) AND e.b IN (SELECT node FROM k{r})
-)"""
-        )
-        prev = f"e{r}"
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f"""
+    # one peel round drops every edge with an endpoint of degree < k
+    kept = (
+        "(SELECT node FROM (SELECT a AS node FROM pe UNION ALL SELECT b FROM pe)"
+        f" GROUP BY 1 HAVING count(*) >= {k})"
+    )
+    return f"""WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+core AS MATERIALIZED (
+  WITH RECURSIVE pe(it, a, b) AS (
+    SELECT 0, a.l_partkey, b.l_partkey
+    FROM items a JOIN items b
+      ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+    GROUP BY 2, 3 HAVING count(*) >= 2
+    UNION ALL
+    SELECT it + 1, a, b FROM pe
+    WHERE it < {rounds} AND a IN {kept} AND b IN {kept}
+  )
+  SELECT a, b FROM pe WHERE it = {rounds}
+)
 SELECT node, CAST(count(*) AS BIGINT) AS degree FROM (
-  SELECT a AS node FROM {prev} UNION ALL SELECT b AS node FROM {prev}
+  SELECT a AS node FROM core UNION ALL SELECT b AS node FROM core
 ) GROUP BY 1
 """
-    )
 
 
 @register("part_kcore_nodes", oracle=_kcore_oracle(_KCORE_K, _KCORE_ROUNDS))
@@ -330,8 +305,8 @@ def q_part_kcore_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-purchase graph — iteratively drop parts with fewer than 3
     co-purchase partners, with their edges, and return the survivors
     with their end-state degrees. The fixed round count keeps the plan
-    static and the oracle an unrolled CTE (pagerank/components
-    discipline); each round is one degree aggregation + two semi-joins
+    static and the oracle one recursive CTE with a round counter;
+    each round is one degree aggregation + two semi-joins
     over the SHRINKING checkpointed edge list (operators/graph.
     kcore_peel), so cost is linear in rounds and bounded by the initial
     edge count."""

@@ -1209,7 +1209,7 @@ def q_unimax_budget_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     "split_leakage_audit",
     oracle=f"""
 WITH RECURSIVE {_JACCARD_EDGE_CTES},
-keyed AS (
+keyed AS MATERIALIZED (
     SELECT d.doc_id,
            {split_sql_case("d.doc_id", _SPLITS)} AS split_doc,
            {split_sql_case("coalesce(a.cluster_id, d.doc_id)", _SPLITS)}
@@ -1331,7 +1331,7 @@ def q_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "corpus_release_report",
     oracle=f"""
 WITH RECURSIVE {_JACCARD_EDGE_CTES},
-keyed AS (
+keyed AS MATERIALIZED (
     SELECT d.doc_id,
            {split_sql_case("d.doc_id", _SPLITS)} AS split_doc,
            {split_sql_case("coalesce(a.cluster_id, d.doc_id)", _SPLITS)}
@@ -1391,7 +1391,7 @@ card2 AS (
                AS token_share
     FROM card
 ),
-csh AS (
+csh AS MATERIALIZED (
     SELECT DISTINCT source, s FROM (
         SELECT source, w[i] || ' ' || w[i + 1] || ' ' || w[i + 2] AS s
         FROM (SELECT source, string_split({_NORM}, ' ') AS w FROM documents)
@@ -1399,13 +1399,13 @@ csh AS (
             ON i <= len(w) - 2
     )
 ),
-csizes AS (SELECT source, CAST(count(*) AS BIGINT) AS n_sh FROM csh GROUP BY 1),
+csizes AS MATERIALIZED (SELECT source, CAST(count(*) AS BIGINT) AS n_sh FROM csh GROUP BY 1),
 ccommon AS (
     SELECT a.source AS src_a, b.source AS src_b, count(*) AS n_common
     FROM csh a JOIN csh b ON a.s = b.s AND a.source < b.source
     GROUP BY 1, 2
 ),
-cj AS (
+cj AS MATERIALIZED (
     SELECT src_a, src_b,
            round(n_common / (sa.n_sh + sb.n_sh - n_common), 4) AS jaccard
     FROM ccommon

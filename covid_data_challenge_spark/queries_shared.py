@@ -202,21 +202,21 @@ FROM t
 def jaccard_edge_ctes(src: str = "documents") -> str:
     return f"""
 docs AS (SELECT doc_id, string_split({_NORM}, ' ') AS w FROM {src}),
-sh AS (
+sh AS MATERIALIZED (
     SELECT DISTINCT doc_id,
            w[i] || ' ' || w[i + 1] || ' ' || w[i + 2] AS s
     FROM docs JOIN (SELECT CAST(unnest(range(1, 100000)) AS INT) AS i) idx
         ON i <= len(w) - 2
 ),
-sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
+sizes AS MATERIALIZED (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
 freq AS (SELECT s, count(*) AS df FROM sh GROUP BY s),
-cold AS (SELECT sh.doc_id, sh.s FROM sh JOIN freq USING (s) WHERE df <= 10),
+cold AS MATERIALIZED (SELECT sh.doc_id, sh.s FROM sh JOIN freq USING (s) WHERE df <= 10),
 common AS (
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
     FROM cold a JOIN cold b ON a.s = b.s AND a.doc_id < b.doc_id
     GROUP BY 1, 2
 ),
-pairs AS (
+pairs AS MATERIALIZED (
     SELECT doc_a, doc_b
     FROM common
     JOIN sizes sa ON sa.doc_id = doc_a

@@ -463,8 +463,8 @@ def _ivf_ctes(n_centroids: int | str = 16) -> str:
     ``n_centroids`` may be a SQL expression string (DuckDB LIMIT takes
     expressions) — the gold-table oracles pass the bounded-cell sizing
     rule so the gate stays valid past 8.7k vectors (ADVICE r8)."""
-    return f"""uniq AS (SELECT vec_id AS id, embedding AS vec FROM embeddings),
-seeds AS (
+    return f"""uniq AS MATERIALIZED (SELECT vec_id AS id, embedding AS vec FROM embeddings),
+seeds AS MATERIALIZED (
     SELECT CAST(row_number() OVER (ORDER BY id) - 1 AS INT) AS cid, vec AS cvec
     FROM uniq ORDER BY id LIMIT {n_centroids}
 ),
@@ -472,7 +472,7 @@ a1 AS ({_dd_assign('uniq', 'seeds')}),
 by_dim AS (
     SELECT cid, unnest(vec) AS x, generate_subscripts(vec, 1) AS pos FROM a1
 ),
-cent AS (
+cent AS MATERIALIZED (
     SELECT cid, list(CAST(m AS FLOAT) ORDER BY pos) AS cvec
     FROM (SELECT cid, pos, avg(CAST(x AS DOUBLE)) AS m FROM by_dim GROUP BY cid, pos)
     GROUP BY cid
@@ -500,11 +500,11 @@ def _ivfpq_build_ctes(
     (ann_pq_build)."""
     sub_dim = 64 // n_sub
     return f"""{_ivf_ctes(n_centroids)},
-sv AS (
+sv AS MATERIALIZED (
     SELECT id, s.sub, vec[s.sub * {sub_dim} + 1 : s.sub * {sub_dim} + {sub_dim}] AS subvec
     FROM uniq CROSS JOIN (SELECT unnest(range({n_sub})) AS sub) s
 ),
-cb0 AS (
+cb0 AS MATERIALIZED (
     SELECT sub, CAST(rn - 1 AS INT) AS code, subvec AS cvec FROM (
         SELECT sub, subvec, row_number() OVER (PARTITION BY sub ORDER BY id) AS rn FROM sv
     ) WHERE rn <= {n_codes}
@@ -523,7 +523,7 @@ cb_dim AS (
     SELECT a.sub, a.code, unnest(s.subvec) AS x, generate_subscripts(s.subvec, 1) AS pos
     FROM asg1 a JOIN sv s ON a.id = s.id AND a.sub = s.sub
 ),
-cb AS (
+cb AS MATERIALIZED (
     -- empty-cluster keep-previous rule (matches operators/pq.pq_train):
     -- a code with zero assignments keeps its cb0 seed centroid, so the
     -- (sub, code) grid stays dense for the Spark side's positional LUT
@@ -566,7 +566,7 @@ def _ann_ivfpq_oracle(
     return f"""
 WITH {_ivfpq_build_ctes(n_centroids, n_sub, n_codes)},
 q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE {qfilter}),
-probes AS (
+probes AS MATERIALIZED (
     SELECT query_id, cid FROM (
         SELECT q.query_id, c.cid,
                row_number() OVER (
@@ -1025,21 +1025,21 @@ def _kc_oracle() -> str:
     corpus aggregate over the chained least() columns."""
     dist = lambda e, c: f"(1.0 - {_dd_cos(e, c)})"  # noqa: E731
     ctes = [
-        "c1 AS (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 1)",
-        f"""d1 AS (
+        "c1 AS MATERIALIZED (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 1)",
+        f"""d1 AS MATERIALIZED (
     SELECT e.vec_id, e.embedding, {dist('e.embedding', 'c1.embedding')} AS dm1
     FROM embeddings e CROSS JOIN c1
 )""",
     ]
     for r in range(2, _KC_K + 1):
         ctes.append(
-            f"""c{r} AS (
+            f"""c{r} AS MATERIALIZED (
     SELECT vec_id, embedding FROM d{r - 1}
     ORDER BY dm{r - 1} DESC, vec_id LIMIT 1
 )"""
         )
         ctes.append(
-            f"""d{r} AS (
+            f"""d{r} AS MATERIALIZED (
     SELECT d.vec_id, d.embedding,
            {', '.join(f'd.dm{i}' for i in range(1, r))},
            least(d.dm{r - 1}, {dist('d.embedding', f'c{r}.embedding')}) AS dm{r}
@@ -1292,13 +1292,13 @@ comp AS (
     JOIN (SELECT CAST(unnest(range(1, {dim + 1})) AS INT) AS i) idx
         ON i <= len(embedding)
 ),
-su AS (SELECT i, CAST(sum(xu) AS BIGINT) AS su FROM comp GROUP BY 1),
+su AS MATERIALIZED (SELECT i, CAST(sum(xu) AS BIGINT) AS su FROM comp GROUP BY 1),
 mu AS (
     SELECT list(CAST(su AS DOUBLE) / (CAST(nn.n AS DOUBLE) * 1000000.0)
                 ORDER BY i) AS mu
     FROM su, nn GROUP BY nn.n
 ),
-xc AS (
+xc AS MATERIALIZED (
     SELECT u.vec_id,
            list_transform(list_zip(u.embedding, m.mu),
                           p -> CAST(p[1] AS DOUBLE) - p[2]) AS xc
@@ -1327,7 +1327,7 @@ uu{t} AS (
     GROUP BY 1
 ),
 w{t} AS (SELECT list(CAST(u AS DOUBLE) / 1000000.0 ORDER BY i) AS w FROM uu{t}),
-v{t} AS (
+v{t} AS MATERIALIZED (
     SELECT list_transform(w, x -> x /
                sqrt(list_aggregate(list_transform(w, y -> y * y), 'sum'))) AS v,
            sqrt(list_aggregate(list_transform(w, y -> y * y), 'sum')) AS lam
@@ -1801,7 +1801,7 @@ comp AS (
     JOIN (SELECT CAST(unnest(range(1, {dim + 1})) AS INT) AS i) idx
         ON i <= len(embedding)
 ),
-su AS (SELECT i, CAST(sum(xu) AS BIGINT) AS su FROM comp GROUP BY 1),
+su AS MATERIALIZED (SELECT i, CAST(sum(xu) AS BIGINT) AS su FROM comp GROUP BY 1),
 mu AS (
     SELECT list(CAST(su AS DOUBLE) / (CAST(nn.n AS DOUBLE) * 1000000.0)
                 ORDER BY i) AS mu
@@ -1844,7 +1844,7 @@ tvu AS (
         )
         s_pass = ", ".join(f"s{k}" for k in range(r))
         parts.append(
-            f"""uuB{t} AS (
+            f"""uuB{t} AS MATERIALIZED (
     SELECT i,
            {u_cols}
     FROM (SELECT {s_pass}, unnest(xc) AS xcj, generate_subscripts(xc, 1) AS i
@@ -1871,7 +1871,7 @@ wB{t}_{k}_{l + 1} AS (
                 )
             last = f"wB{t}_{k}_{k}"
             parts.append(
-                f"""bv{t}_{k} AS (
+                f"""bv{t}_{k} AS MATERIALIZED (
     SELECT list_transform(w, y -> y / lam) AS v, lam
     FROM (SELECT w,
                  sqrt(list_aggregate(list_transform(w, y -> y * y), 'sum'))
@@ -2600,11 +2600,11 @@ resid AS (
                x -> CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)) AS rv
     FROM inv i JOIN cent c USING (cid)
 ),
-svr AS (
+svr AS MATERIALIZED (
     SELECT id, s.sub, rv[s.sub * {sub_dim} + 1 : s.sub * {sub_dim} + {sub_dim}] AS subvec
     FROM resid CROSS JOIN (SELECT unnest(range({n_sub})) AS sub) s
 ),
-cb0r AS (
+cb0r AS MATERIALIZED (
     SELECT sub, CAST(rn - 1 AS INT) AS code, subvec AS cvec FROM (
         SELECT sub, subvec, row_number() OVER (PARTITION BY sub ORDER BY id) AS rn FROM svr
     ) WHERE rn <= {n_codes}
@@ -2623,7 +2623,7 @@ cbdimr AS (
     SELECT a.sub, a.code, unnest(s.subvec) AS x, generate_subscripts(s.subvec, 1) AS pos
     FROM asg1r a JOIN svr s ON a.id = s.id AND a.sub = s.sub
 ),
-cbr AS (
+cbr AS MATERIALIZED (
     SELECT c0.sub, c0.code, coalesce(m.cvec, c0.cvec) AS cvec
     FROM cb0r c0 LEFT JOIN (
         SELECT sub, code, list(CAST(CAST(m AS FLOAT) AS DOUBLE) ORDER BY pos) AS cvec
@@ -2659,7 +2659,7 @@ def _ann_ivfpq_residual_oracle(
     return f"""
 WITH {_ivfpq_residual_build_ctes(n_centroids, n_sub, n_codes)},
 q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE {qfilter}),
-probes AS (
+probes AS MATERIALIZED (
     SELECT query_id, cid FROM (
         SELECT q.query_id, c.cid,
                row_number() OVER (

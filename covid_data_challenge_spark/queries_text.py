@@ -2301,10 +2301,52 @@ def q_hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Round 6: unigram-LM tokenizer hard-EM round (SentencePiece's model
 # family, Kudo 2018) — the probabilistic sibling of the BPE merge loop.
-# The oracle unrolls the per-word Viterbi DP as chained CTE columns: the
+# The oracle runs the per-word Viterbi DP as a recursive CTE: the
 # DP is INTEGER (micro-nat scores, cells encode best·8 + piece_len), so
 # there is no float argmax tie to diverge on.
 # ---------------------------------------------------------------------------
+
+
+def _unigram_viterbi_ctes(px: str, src: str, max_piece: int) -> str:
+    """Viterbi segmentation of every word in the score pivot ``src``
+    (w, n, lw, sc) as two recursive CTEs: ``{px}cells`` runs the
+    forward DP one word position per step (cell i = best total·8 +
+    final piece length, an exact BIGINT), ``{px}pieces`` walks the
+    cells back from the word's end, one piece per step. Neither grows
+    with the word length."""
+
+    def pj(b: str) -> str:  # piece length from a combined cell
+        return f"((({b} % 8) + 8) % 8)"
+
+    def pt(b: str) -> str:  # score total from a combined cell (exact)
+        return f"CAST((({b} - {pj(b)}) / 8) AS BIGINT)"
+
+    score = f"sc[(i + 1 - j) * {max_piece} + j]"
+    return f"""{px}cells AS MATERIALIZED (
+    WITH RECURSIVE dp(w, n, lw, sc, i, cells) AS (
+        SELECT w, n, lw, sc, 0, CAST([] AS BIGINT[]) FROM {src}
+        UNION ALL
+        SELECT w, n, lw, sc, i + 1, list_append(cells, list_max(list_transform(
+            range(1, least({max_piece}, i + 1) + 1),
+            j -> CASE WHEN {score} IS NOT NULL
+                      THEN ((CASE WHEN i + 1 - j = 0 THEN CAST(0 AS BIGINT)
+                                  ELSE {pt("cells[i + 1 - j]")} END) + {score}) * 8 + j
+                      ELSE CAST({-(2**50)} AS BIGINT) END)))
+        FROM dp WHERE i < lw
+    )
+    SELECT w, n, lw, cells FROM dp WHERE i = lw
+),
+{px}pieces AS (
+    WITH RECURSIVE bt(w, n, cells, pos, piece) AS (
+        SELECT w, n, cells, CAST(lw AS INT), CAST(NULL AS VARCHAR) FROM {px}cells
+        UNION ALL
+        SELECT w, n, cells, CAST(pos - {pj("cells[pos]")} AS INT),
+               substr(w, CAST(pos - {pj("cells[pos]")} + 1 AS INT),
+                      CAST({pj("cells[pos]")} AS INT))
+        FROM bt WHERE pos > 0
+    )
+    SELECT w, n, piece FROM bt WHERE piece IS NOT NULL
+)"""
 
 
 def _unigram_oracle_sql(
@@ -2322,12 +2364,6 @@ def _unigram_oracle_sql(
     under fixed scores is additive over word instances)."""
     from covid_data_challenge_spark.functions.pmath import portable_ln_sql_stages
 
-    def pj(b: str) -> str:  # piece length from a combined cell
-        return f"((({b} % 8) + 8) % 8)"
-
-    def pt(b: str) -> str:  # score total from a combined cell (exact)
-        return f"CAST((({b} - {pj(b)}) / 8) AS BIGINT)"
-
     v_stage, v_final = portable_ln_sql_stages(
         {"l_f": "CAST(f AS DOUBLE)", "l_t": "CAST(ftot AS DOUBLE)"}
     )
@@ -2338,68 +2374,13 @@ def _unigram_oracle_sql(
         }
     )
 
-    score_cols = ",\n           ".join(
-        f"MAX(CASE WHEN start = {s} AND len = {j} THEN u END) AS s_{s}_{j}"
+    # the score pivot: sc[(start - 1) * max_piece + len] is the piece's
+    # micro-nat score, NULL where the piece is not in the vocabulary
+    score_pivot = "[" + ", ".join(
+        f"MAX(CASE WHEN start = {s} AND len = {j} THEN u END)"
         for s in range(1, max_word + 1)
         for j in range(1, max_piece + 1)
-        if s + j - 1 <= max_word
-    )
-
-    def dp_block(px: str, src: str) -> tuple[str, str]:
-        """Prefixed DP + backtrack + pieces CTE block reading the score
-        pivot ``src`` (columns w, n, lw, s_{start}_{len}). Returns
-        (ctes_sql, pieces_cte_name). All chained CTEs are MATERIALIZED —
-        each cell references its predecessor ~8 times, and DuckDB's
-        default CTE inlining would expand the chain exponentially."""
-        dp_ctes = []
-        for i in range(1, max_word + 1):
-            cands = []
-            for j in range(1, min(max_piece, i) + 1):
-                s = i - j + 1
-                prev = "CAST(0 AS BIGINT)" if i - j == 0 else pt(f"{px}b{i - j}")
-                cands.append(
-                    f"CASE WHEN s_{s}_{j} IS NOT NULL THEN ({prev} + s_{s}_{j}) * 8 + {j} "
-                    f"ELSE CAST({-(2**50)} AS BIGINT) END"
-                )
-            expr = cands[0] if len(cands) == 1 else "greatest(" + ", ".join(cands) + ")"
-            frm = src if i == 1 else f"{px}d{i - 1}"
-            dp_ctes.append(
-                f"{px}d{i} AS MATERIALIZED (SELECT *, {expr} AS {px}b{i} FROM {frm})"
-            )
-
-        bt_ctes = []
-        b_of_pos_tpl = (
-            "CASE {pos} "
-            + " ".join(f"WHEN {p} THEN {px}b{p}" for p in range(1, max_word + 1))
-            + " ELSE CAST(0 AS BIGINT) END"
-        )
-        bt_ctes.append(
-            f"{px}t0 AS MATERIALIZED (SELECT *, CAST(lw AS INT) AS {px}pos_0 "
-            f"FROM {px}d{max_word})"
-        )
-        for k in range(1, max_word + 1):
-            b_at = b_of_pos_tpl.format(pos=f"{px}pos_{k - 1}")
-            bt_ctes.append(
-                f"""{px}tj{k} AS MATERIALIZED (SELECT *, CASE WHEN {px}pos_{k - 1} > 0 THEN {pj(f'({b_at})')} ELSE 0 END AS {px}j_{k} FROM {px}t{k - 1})"""
-            )
-            bt_ctes.append(
-                f"""{px}t{k} AS MATERIALIZED (SELECT *,
-    CASE WHEN {px}pos_{k - 1} > 0 THEN substr(w, CAST({px}pos_{k - 1} - {px}j_{k} + 1 AS INT), CAST({px}j_{k} AS INT)) END AS {px}piece_{k},
-    CAST(CASE WHEN {px}pos_{k - 1} > 0 THEN {px}pos_{k - 1} - {px}j_{k} ELSE 0 END AS INT) AS {px}pos_{k} FROM {px}tj{k})"""
-            )
-        piece_union = "\n    UNION ALL ".join(
-            f"SELECT w, n, {px}piece_{k} AS piece FROM {px}t{max_word} "
-            f"WHERE {px}piece_{k} IS NOT NULL"
-            for k in range(1, max_word + 1)
-        )
-        ctes = ",".join(dp_ctes) + ",\n" + ",".join(bt_ctes) + f""",
-{px}pieces AS (
-    {piece_union}
-)"""
-        return ctes, f"{px}pieces"
-
-    r1_block, _ = dp_block("", "ss")
-    dp_ctes_sql = r1_block  # round-1 names stay unprefixed (b1, t1, pieces)
+    ) + "] AS sc"
 
     src = (
         "(SELECT * FROM documents WHERE doc_id % 5 <> 0)"
@@ -2413,14 +2394,14 @@ wd AS (
     SELECT w, CAST(count(*) AS BIGINT) AS n FROM inst
     WHERE len(w) BETWEEN 1 AND {max_word} GROUP BY w
 ),
-subs AS (
+subs AS MATERIALIZED (
     SELECT w, n, CAST(a.s AS INT) AS start, CAST(b.j AS INT) AS len,
            substr(w, CAST(a.s AS INT), CAST(b.j AS INT)) AS piece
     FROM wd,
     LATERAL (SELECT unnest(range(1, len(w) + 1)) AS s) a,
     LATERAL (SELECT unnest(range(1, least({max_piece}, len(w) - a.s + 1) + 1)) AS j) b
 ),
-pf AS (SELECT piece, CAST(sum(n) AS BIGINT) AS f FROM subs GROUP BY 1),
+pf AS MATERIALIZED (SELECT piece, CAST(sum(n) AS BIGINT) AS f FROM subs GROUP BY 1),
 vocab0 AS (
     SELECT piece, f FROM pf WHERE len(piece) = 1
     UNION ALL
@@ -2432,7 +2413,7 @@ vocab0 AS (
 ftot AS (SELECT CAST(sum(f) AS BIGINT) AS ftot FROM vocab0),
 vst AS (SELECT piece, f, {v_stage} FROM vocab0 CROSS JOIN ftot),
 vln AS (SELECT piece, f, {v_final} FROM vst),
-vocab AS (
+vocab AS MATERIALIZED (
     SELECT piece, f, CAST(floor(1000000.0 * (l_f - l_t)) AS BIGINT) AS u FROM vln
 ),
 seg AS (
@@ -2441,10 +2422,10 @@ seg AS (
 ),
 ss AS MATERIALIZED (
     SELECT w, n, len(w) AS lw,
-           {score_cols}
+           {score_pivot}
     FROM seg GROUP BY w, n, len(w)
 ),
-{dp_ctes_sql}"""
+{_unigram_viterbi_ctes("", "ss", max_piece)}"""
     if tail == "encode":
         return f"""
 WITH {chain},
@@ -2462,20 +2443,18 @@ SELECT d.doc_id,
 FROM docw d JOIN wpc USING (w)
 GROUP BY d.doc_id
 """
-    em_ctes = f"""used AS (SELECT piece, CAST(sum(n) AS BIGINT) AS vc FROM pieces GROUP BY 1),
-j2 AS (
+    em_ctes = f"""used AS MATERIALIZED (SELECT piece, CAST(sum(n) AS BIGINT) AS vc FROM pieces GROUP BY 1),
+j2 AS MATERIALIZED (
     SELECT v.piece, v.f, CAST(coalesce(u2.vc, 0) AS BIGINT) AS vc
     FROM vocab v LEFT JOIN used u2 USING (piece)
 ),
-vtot AS (SELECT CAST(sum(vc) AS BIGINT) AS vtot FROM j2),
+vtot AS MATERIALIZED (SELECT CAST(sum(vc) AS BIGINT) AS vtot FROM j2),
 nst AS (SELECT piece, f, vc, {n_stage} FROM j2 CROSS JOIN vtot),
-nln AS (SELECT piece, f, vc, {n_final} FROM nst)"""
+nln AS MATERIALIZED (SELECT piece, f, vc, {n_final} FROM nst)"""
     if tail == "incr":
         # history round-2 vocab (v2 exactly as the em2 round), history
         # usage under it (used2), then ONE merged-dictionary E-step
         # under v2 ∪ floor-scored batch-new singles, M-step re-score
-        r2b, r2p = dp_block("r2", "ss2")
-        mb, mp = dp_block("m", "mss")
         f_stage, f_final = portable_ln_sql_stages(
             {"l_one": "CAST(1 AS DOUBLE)", "l_v1": "CAST(vtot AS DOUBLE)"}
         )
@@ -2488,7 +2467,7 @@ nln AS (SELECT piece, f, vc, {n_final} FROM nst)"""
         return f"""
 WITH {chain},
 {em_ctes},
-v2 AS (
+v2 AS MATERIALIZED (
     SELECT piece, vc AS round1_count,
            CAST(floor(1000000.0 * (l_vc - l_vt)) AS BIGINT) AS u
     FROM nln WHERE vc > 0 OR len(piece) = 1
@@ -2499,17 +2478,17 @@ seg2 AS (
 ),
 ss2 AS MATERIALIZED (
     SELECT w, n, len(w) AS lw,
-           {score_cols}
+           {score_pivot}
     FROM seg2 GROUP BY w, n, len(w)
 ),
-{r2b},
-used2 AS (SELECT piece, CAST(sum(n) AS BIGINT) AS vc2 FROM {r2p} GROUP BY 1),
+{_unigram_viterbi_ctes("r2", "ss2", max_piece)},
+used2 AS MATERIALIZED (SELECT piece, CAST(sum(n) AS BIGINT) AS vc2 FROM r2pieces GROUP BY 1),
 minst AS (SELECT unnest(string_split({_NORM}, ' ')) AS w FROM documents),
 mwd AS (
     SELECT w, CAST(count(*) AS BIGINT) AS n FROM minst
     WHERE len(w) BETWEEN 1 AND {max_word} GROUP BY w
 ),
-msubs AS (
+msubs AS MATERIALIZED (
     SELECT w, n, CAST(a.s AS INT) AS start, CAST(b.j AS INT) AS len,
            substr(w, CAST(a.s AS INT), CAST(b.j AS INT)) AS piece
     FROM mwd,
@@ -2526,19 +2505,19 @@ nsv AS (
     SELECT piece, CAST(floor(1000000.0 * (l_one - l_v1)) AS BIGINT) AS u
     FROM fln
 ),
-warm AS (SELECT piece, u FROM v2 UNION ALL SELECT piece, u FROM nsv),
+warm AS MATERIALIZED (SELECT piece, u FROM v2 UNION ALL SELECT piece, u FROM nsv),
 mseg AS (
     SELECT s.w, s.n, s.start, s.len, v.u
     FROM msubs s JOIN warm v USING (piece)
 ),
 mss AS MATERIALIZED (
     SELECT w, n, len(w) AS lw,
-           {score_cols}
+           {score_pivot}
     FROM mseg GROUP BY w, n, len(w)
 ),
-{mb},
-mused AS (SELECT piece, CAST(sum(n) AS BIGINT) AS vcm FROM {mp} GROUP BY 1),
-jm AS (
+{_unigram_viterbi_ctes("m", "mss", max_piece)},
+mused AS (SELECT piece, CAST(sum(n) AS BIGINT) AS vcm FROM mpieces GROUP BY 1),
+jm AS MATERIALIZED (
     SELECT w.piece,
            CAST(coalesce(h.vc2, 0) AS BIGINT) AS hist_count,
            CAST(coalesce(m.vcm, 0) AS BIGINT) AS vc
@@ -2594,7 +2573,6 @@ FROM nln
         src_vc = "vc" if r == 2 else f"vc{r - 1}"
         src_lv = "l_vc" if r == 2 else f"l_v{r - 1}"
         src_lt = "l_vt" if r == 2 else f"l_t{r - 1}"
-        rb, rp = dp_block(f"r{r}", f"ss{r}")
         st, fin = portable_ln_sql_stages(
             {
                 f"l_v{r}": f"CAST(greatest(vc{r}, 1) AS DOUBLE)",
@@ -2602,7 +2580,7 @@ FROM nln
             }
         )
         round_ctes.append(
-            f"""v{r} AS (
+            f"""v{r} AS MATERIALIZED (
     SELECT piece, {src_vc} AS round{r - 1}_count,
            CAST(floor(1000000.0 * ({src_lv} - {src_lt})) AS BIGINT) AS u
     FROM {src_ln} WHERE {src_vc} > 0 OR len(piece) = 1
@@ -2613,18 +2591,18 @@ seg{r} AS (
 ),
 ss{r} AS MATERIALIZED (
     SELECT w, n, len(w) AS lw,
-           {score_cols}
+           {score_pivot}
     FROM seg{r} GROUP BY w, n, len(w)
 ),
-{rb},
-used{r} AS (SELECT piece, CAST(sum(n) AS BIGINT) AS vc{r} FROM {rp} GROUP BY 1),
-j{r + 1} AS (
+{_unigram_viterbi_ctes(f"r{r}", f"ss{r}", max_piece)},
+used{r} AS MATERIALIZED (SELECT piece, CAST(sum(n) AS BIGINT) AS vc{r} FROM r{r}pieces GROUP BY 1),
+j{r + 1} AS MATERIALIZED (
     SELECT v.piece, v.round{r - 1}_count, CAST(coalesce(u{r + 1}.vc{r}, 0) AS BIGINT) AS vc{r}
     FROM v{r} v LEFT JOIN used{r} u{r + 1} USING (piece)
 ),
-vtot{r} AS (SELECT CAST(sum(vc{r}) AS BIGINT) AS vt{r} FROM j{r + 1}),
+vtot{r} AS MATERIALIZED (SELECT CAST(sum(vc{r}) AS BIGINT) AS vt{r} FROM j{r + 1}),
 n{r}st AS (SELECT piece, round{r - 1}_count, vc{r}, {st} FROM j{r + 1} CROSS JOIN vtot{r}),
-n{r}ln AS (SELECT piece, round{r - 1}_count, vc{r}, {fin} FROM n{r}st)"""
+n{r}ln AS MATERIALIZED (SELECT piece, round{r - 1}_count, vc{r}, {fin} FROM n{r}st)"""
         )
     rounds_sql = ",\n".join(round_ctes)
     if tail.startswith("converged"):
@@ -2633,21 +2611,21 @@ n{r}ln AS (SELECT piece, round{r - 1}_count, vc{r}, {fin} FROM n{r}st)"""
         # the first r with L_r − L_{r−1} ≤ 0 (else k_max) — so the
         # oracle is scale-independent: the pytest gate at sf0.001
         # (fixpoint 3) and the driver gate at sf0.01 (fixpoint 4) both
-        # hash-match the same SQL. Costs a k_max-round unroll.
+        # hash-match the same SQL. Costs k_max DP rounds.
         l_ctes = [
-            "lik1 AS (SELECT CAST(sum(u2.vc * v.u) AS BIGINT) AS l "
+            "lik1 AS MATERIALIZED (SELECT CAST(sum(u2.vc * v.u) AS BIGINT) AS l "
             "FROM used u2 JOIN vocab v USING (piece))"
         ]
         for r in range(2, k + 1):
             l_ctes.append(
-                f"lik{r} AS (SELECT CAST(sum(ur.vc{r} * v.u) AS BIGINT) AS l "
+                f"lik{r} AS MATERIALIZED (SELECT CAST(sum(ur.vc{r} * v.u) AS BIGINT) AS l "
                 f"FROM used{r} ur JOIN v{r} v USING (piece))"
             )
         cases = " ".join(
             f"WHEN (SELECT l FROM lik{r}) - (SELECT l FROM lik{r - 1}) <= 0 THEN {r}"
             for r in range(2, k + 1)
         )
-        ks = f"ks AS (SELECT CASE {cases} ELSE {k} END AS kstar)"
+        ks = f"ks AS MATERIALIZED (SELECT CASE {cases} ELSE {k} END AS kstar)"
         branches = "\nUNION ALL\n".join(
             f"""SELECT piece, CAST(len(piece) AS INT) AS piece_len,
        round{r - 1}_count AS prev_round_count,
@@ -2721,8 +2699,8 @@ def q_unigram_lm_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     The whole round is oracle-checked INCLUDING the DP: piece scores
     are integer micro-nats, each Viterbi cell is one BIGINT
     (best_total·8 + final_piece_len, longer piece wins score ties), so
-    both engines run identical integer argmaxes — DuckDB unrolls the
-    DP as chained CTE columns over the ≤12 word positions. Scale: one
+    both engines run identical integer argmaxes — DuckDB runs the DP
+    as a recursive CTE, one word position per step. Scale: one
     corpus scan into the Heaps-law-bounded word dictionary; the E-step
     is a per-row column fold (no shuffle); M-step is one piece-keyed
     aggregation (operators/unigram.py)."""
@@ -2757,8 +2735,8 @@ def q_unigram_lm_em2(spark: SparkSession, sf_dir: str) -> DataFrame:
     abandons (or adopts — a piece can gain usage once its competitors
     are pruned) show up in the round-2 counts.
 
-    The oracle chains BOTH DP unrolls (prefixed CTE blocks, all
-    MATERIALIZED) — the same integer micro-nat cells, so two full EM
+    The oracle chains BOTH DP rounds (prefixed recursive-CTE blocks,
+    rounds MATERIALIZED) — the same integer micro-nat cells, so two full EM
     rounds stay hash-exact end to end (operators/unigram.py:
     unigram_em_round2)."""
     from covid_data_challenge_spark.operators.unigram import unigram_em_round2
@@ -2794,8 +2772,8 @@ def q_unigram_lm_em3(spark: SparkSession, sf_dir: str) -> DataFrame:
     compiling as its own whole-stage-codegen stage (janino's 64 KB
     method limit — the r6 `unigram_lm_em2` fallback lesson).
 
-    The oracle chains all three DP unrolls (prefixed MATERIALIZED CTE
-    blocks) over the same integer micro-nat cells, so three full EM
+    The oracle chains all three DP rounds (prefixed recursive-CTE
+    blocks, rounds MATERIALIZED) over the same integer micro-nat cells, so three full EM
     rounds stay hash-exact end to end (operators/unigram.py:
     unigram_em_rounds)."""
     from covid_data_challenge_spark.operators.unigram import unigram_em_rounds
@@ -2814,7 +2792,7 @@ def q_unigram_lm_em_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-nat sum Σ vc·u — one BIGINT collected per round, the k-center
     API-boundary-scalar discipline) stops improving by more than tol=0,
     bounded by k_max=5. The oracle replays the convergence RULE itself,
-    not a realized count: it unrolls all k_max DP rounds, computes each
+    not a realized count: it runs all k_max DP rounds, computes each
     round's likelihood as the same BIGINT sum, picks the stop round
     with the same first-nonimproving-delta rule, and emits that round's
     EM table plus `rounds_run`/`ll_delta_units` — so it is
@@ -2822,7 +2800,7 @@ def q_unigram_lm_em_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     at THREE rounds, the driver gate's sf0.01 at FOUR; both hash-match
     this one SQL) and an engine stopping early/late/nonzero hash-fails
     at any scale (operators/unigram.py:unigram_em_converged; k_max=5
-    bounds the oracle unroll, the operator takes any k_max)."""
+    bounds the oracle's rounds, the operator takes any k_max)."""
     from covid_data_challenge_spark.operators.unigram import unigram_em_converged
 
     return unigram_em_converged(_docs(spark, sf_dir), tol=0, k_max=5)

@@ -19,26 +19,21 @@ from covid_data_challenge_spark.sources.readers import TESTDATA_TABLES
 def duckdb_connection(sf_dir: str):
     """DuckDB connection with the driver's table views pre-registered.
 
-    ``compressed_materialization`` and ``join_order`` are disabled:
-    both are PLANNER phases that go superlinear on the engine's giant
-    unrolled-CTE oracles (r13 profile: `unigram_lm_em_converged`'s
-    187 KB / 244-CTE oracle spent 234 s at sf0.001 — `EXPLAIN` alone
-    exceeded 115 s — vs 28 s with the two disabled, identical rows;
-    `corpus_prep_recipe_v5` 111 → 15 s, `embedding_top_pcs` 59 → 12 s).
-    The oracles are hand-written with sensible join orders over
-    gate-scale data, so the optimizer phases buy nothing here. Row sets
-    are unaffected, and the full 332-query sweep passed with both phases
-    disabled. Float values are not guaranteed bit-identical, though: a
-    different plan can sum or average in a different order, and an oracle
-    that rounds a float expression near a half-step (such as
-    ``robust_anomaly_days_planted``'s ``round(d - seasonal, 6)``) can then
-    land on the other side of it."""
+    It runs with DuckDB's default settings, like any plain
+    ``duckdb.connect()`` that runs the oracle strings, so every oracle
+    must plan in time linear in its length under the default planner. DuckDB inlines a
+    non-materialised CTE at each place it is read, so an unrolled chain
+    whose rounds re-read earlier rounds grows with every round. Two
+    rules keep the oracles linear:
+
+    - an iteration whose step is a fixed SQL expression of the previous
+      round is one ``WITH RECURSIVE`` CTE with an ``it`` column, not N
+      pasted copies;
+    - a CTE that later rounds, scalar subqueries or several branches
+      read is ``MATERIALIZED``."""
     import duckdb
 
     con = duckdb.connect()
-    con.execute(
-        "SET disabled_optimizers='compressed_materialization,join_order'"
-    )
     for t in TESTDATA_TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     return con

@@ -4,6 +4,8 @@ repeats this at sf0.01)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 import covid_data_challenge_spark.queries  # noqa: F401 — populates REGISTRY
@@ -47,3 +49,45 @@ def test_registry_order_matches_frozen_driver_contract():
     names = list(REGISTRY)
     assert names[: len(CANONICAL_ORDER)] == list(CANONICAL_ORDER)
     assert all(REGISTRY[n].spark is not None for n in CANONICAL_ORDER)
+
+
+def test_duckdb_connection_uses_default_settings(con):
+    """The gate runs the oracles under DuckDB's defaults, like any
+    plain ``duckdb.connect()``: no setting (no optimizer switched off)
+    differs from a fresh connection's."""
+    import duckdb
+
+    settings = "SELECT name, value FROM duckdb_settings() ORDER BY name"
+    plain = duckdb.connect()
+    try:
+        assert con.execute(settings).fetchall() == plain.execute(settings).fetchall()
+    finally:
+        plain.close()
+
+
+def test_gd_oracle_does_not_grow_with_iterations():
+    """The GD twin is one recursive CTE: more steps change only the
+    iteration-count literal, not the SQL."""
+    from covid_data_challenge_spark.queries_curation import _gd_cte
+
+    def sql(iters):
+        return _gd_cte("w", "feat", "SELECT 0 AS bucket, 0 AS w_units", iters, 5.0)
+
+    assert sql(12) == sql(3).replace("it < 3", "it < 12").replace("it = 3", "it = 12")
+
+
+def _cte_names(sql: str) -> set[str]:
+    return set(re.findall(r"(\w+)(?:\([\w, ]*\))? AS (?:MATERIALIZED )?\(", sql))
+
+
+@pytest.mark.parametrize("tail", ["em", "converged5", "incr"])
+def test_unigram_viterbi_ctes_do_not_grow_with_word_length(tail):
+    """The Viterbi forward pass and backtrack are recursive CTEs: a
+    longer word bound adds no CTE (an unrolled DP adds one DP and two
+    backtrack CTEs per word position)."""
+    from covid_data_challenge_spark.queries_text import _unigram_oracle_sql
+
+    short = _unigram_oracle_sql(max_word=8, tail=tail)
+    long = _unigram_oracle_sql(max_word=12, tail=tail)
+    assert _cte_names(long) == _cte_names(short)
+    assert "pieces" in _cte_names(long)

@@ -9,8 +9,10 @@ Usage: python tools/oracle_check.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import fcntl
 import os
 import sys
+import tempfile
 import time
 from pathlib import Path
 
@@ -65,7 +67,20 @@ _EMPTY_OK = {
 }
 
 
+#: one sweep at a time per host: a sweep holds a JVM plus the DuckDB
+#: oracles' working set, and two at once can exhaust memory and lose
+#: both JVMs
+LOCK_PATH = os.path.join(tempfile.gettempdir(), "spark_graft_oracle_check.lock")
+
+
 def main() -> int:
+    lock = open(LOCK_PATH, "w")
+    try:
+        fcntl.flock(lock, fcntl.LOCK_EX | fcntl.LOCK_NB)
+    except BlockingIOError:
+        print(f"another oracle sweep holds {LOCK_PATH}; wait for it to finish",
+              file=sys.stderr)
+        return 2
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
     # exact basename match, not endswith: 'mysf0.01' or a future
@@ -83,6 +98,7 @@ def main() -> int:
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
+    spark_total = duck_total = 0.0
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -98,15 +114,20 @@ def main() -> int:
             print(f"FAIL  {name}: spark error: {e}")
             continue
         spark_s = time.time() - t0
+        spark_total += spark_s
         if name not in oracles:
             print(f"ok?   {name}: rows-only ({len(sdf)} rows, {spark_s:.1f}s spark) — no oracle")
             continue
+        t0 = time.time()
         try:
             odf = con.execute(oracles[name]).fetchdf()
         except Exception as e:  # noqa: BLE001
             failures.append(name)
             print(f"FAIL  {name}: duckdb error: {e}")
             continue
+        duck_s = time.time() - t0
+        duck_total += duck_s
+        times = f"{spark_s:.1f}s spark, {duck_s:.2f}s duckdb"
         match, why = values_match(normalize(sdf), normalize(odf))
         if match and len(sdf) == 0 and name not in _EMPTY_OK:
             failures.append(name)
@@ -116,11 +137,12 @@ def main() -> int:
                 "or add a written _EMPTY_OK reason"
             )
         elif match:
-            print(f"PASS  {name} ({len(sdf)} rows, {spark_s:.1f}s spark)")
+            print(f"PASS  {name} ({len(sdf)} rows, {times})")
         else:
             failures.append(name)
-            print(f"FAIL  {name}: {why}")
-    print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
+            print(f"FAIL  {name}: {why} ({times})")
+    print(f"\ntotal {spark_total:.1f}s spark, {duck_total:.1f}s duckdb")
+    print(f"{len(failures)} failures" + (f": {failures}" if failures else ""))
     return 1 if failures else 0
 
 
