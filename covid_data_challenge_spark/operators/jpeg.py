@@ -26,13 +26,21 @@ three single-component scans), and ``encode_jpeg_progressive`` (a
 three produce IDENTICAL quantized coefficients for the same inputs, so
 cross-layout decode equality is exact and pinned in pytest.
 
-Decode math is float64 separable IDCT (numpy matrix product per block)
-— a decode kernel already runs per row inside an Arrow-batched
-``mapInPandas``, so clarity beats micro-optimization; at 100 TB the
-parallelism comes from partitioning media rows, not from the per-block
-loop. JPEG is lossy: round-trip tests assert error BOUNDS (and exact
-flatness for DC-only images), not pixel equality — the PNG/PPM decoders
-keep the pixel-exact roundtrip duty.
+Decode math is float64 separable IDCT per block, and the encoders'
+FDCT is its transpose. Both go through :func:`separable_product`,
+which sums every matrix product sequentially over k, left to right,
+with plain numpy multiply and add, never BLAS. A BLAS ``@`` picks its
+kernel from the CPU at run time (OpenBLAS ``DYNAMIC_ARCH``), and the
+FMA kernels round differently from the others: enough to move a
+near-half quantization tie, so one media-corpus image encoded to
+different bytes on different CPUs. Numpy never fuses a multiply and an
+add, so the fixed order gives the same IEEE-754 bits on every CPU and
+BLAS build. A decode kernel already runs per row inside an
+Arrow-batched ``mapInPandas``, so clarity beats micro-optimization; at
+100 TB the parallelism comes from partitioning media rows, not from
+the per-block loop. JPEG is lossy: round-trip tests assert error
+BOUNDS (and exact flatness for DC-only images), not pixel equality —
+the PNG/PPM decoders keep the pixel-exact roundtrip duty.
 
 Reference behavior (not code): reference repo has no media path at all;
 this extends the engine's multimodal tier (SURVEY.md LLM-pipeline
@@ -163,6 +171,28 @@ def _dct_matrix() -> np.ndarray:
 _A = _dct_matrix()
 
 
+def separable_product(m: np.ndarray, x: np.ndarray) -> np.ndarray:
+    """``m @ x @ m.T`` in a fixed summation order, without BLAS.
+
+    ``(m @ x)`` is computed first, then ``(...) @ m.T``. Each product
+    ``a @ b`` is summed sequentially over k, left to right:
+    ``out[i, j] = ((a[i, 0]*b[0, j] + a[i, 1]*b[1, j]) + a[i, 2]*b[2, j])
+    + ...``, every product and every sum rounded to float64 on its own.
+    So the bits depend only on IEEE-754, never on which BLAS kernel the
+    CPU selects (FMA kernels move near-half rounding ties). With ``m``
+    the DCT matrix this is the forward 2-D DCT; with ``m.T`` it is the
+    inverse."""
+    return _matmul_fixed(_matmul_fixed(m, x), m.T)
+
+
+def _matmul_fixed(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """``a @ b`` summed sequentially over k (see separable_product)."""
+    acc = a[:, 0:1] * b[0:1, :]
+    for k in range(1, a.shape[1]):
+        acc = acc + a[:, k : k + 1] * b[k : k + 1, :]
+    return acc
+
+
 def _scaled_qt(base: np.ndarray, quality: int) -> np.ndarray:
     """libjpeg-convention quality scaling, clamped to [1, 255]."""
     q = min(max(int(quality), 1), 100)
@@ -228,7 +258,7 @@ def _encode_block(
 ) -> int:
     """FDCT + quantize + zigzag + Huffman one 8x8 block; returns new DC
     predictor."""
-    coef = _A @ (block.astype(np.float64) - 128.0) @ _A.T
+    coef = separable_product(_A, block.astype(np.float64) - 128.0)
     q = np.round(coef / qt).astype(np.int32)
     zz = [int(q[r, c]) for (r, c) in ZIGZAG]
     return _encode_coef_block(zz, dc_codes, ac_codes, pred, bw)
@@ -923,7 +953,7 @@ def _reconstruct(frame: dict, coefs: list[np.ndarray], qts: dict):
                 zz = arr[row, col]
                 for idx, (r_, c_) in enumerate(ZIGZAG):
                     coef[r_, c_] = int(zz[idx]) * qt[r_, c_]
-                block = _A.T @ coef @ _A + 128.0
+                block = separable_product(_A.T, coef) + 128.0
                 plane[row * 8 : row * 8 + 8, col * 8 : col * 8 + 8] = np.clip(
                     np.round(block), 0, 255
                 ).astype(np.uint8)
@@ -949,14 +979,14 @@ def _reconstruct(frame: dict, coefs: list[np.ndarray], qts: dict):
 
 def _quantize_plane(plane: np.ndarray, qt: np.ndarray, nby: int, nbx: int) -> np.ndarray:
     """FDCT + quantize each 8×8 block → (nby, nbx, 64) int32 in zigzag
-    order. Same per-block matmul + np.round op order as _encode_block."""
+    order. Same per-block FDCT + np.round op order as _encode_block."""
     out = np.zeros((nby, nbx, 64), dtype=np.int32)
     zz_r = [r for (r, _) in ZIGZAG]
     zz_c = [c for (_, c) in ZIGZAG]
     for row in range(nby):
         for col in range(nbx):
             block = plane[row * 8 : row * 8 + 8, col * 8 : col * 8 + 8]
-            coef = _A @ (block.astype(np.float64) - 128.0) @ _A.T
+            coef = separable_product(_A, block.astype(np.float64) - 128.0)
             q = np.round(coef / qt).astype(np.int32)
             out[row, col] = q[zz_r, zz_c]
     return out

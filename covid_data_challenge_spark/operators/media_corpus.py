@@ -69,8 +69,11 @@ from covid_data_challenge_spark.operators.multimodal import (
 #: bump to invalidate cached corpora when the layout contract changes
 #: (v3: the r10 phash_hashes precision fix — v2 image_fp gold tables
 #: hold float64-rounded hashes wherever a quarantine slot shared the
-#: Arrow batch)
-MEDIA_CORPUS_VERSION = 3
+#: Arrow batch; v4: the BLAS-free DCT — jpeg.separable_product's fixed
+#: summation order, so corpus item 25's JPEG no longer depends on
+#: whether the CPU's BLAS kernel uses FMA, and a store built under v3
+#: may hold the FMA-encoded bytes)
+MEDIA_CORPUS_VERSION = 4
 
 #: one corpus item per ~10 documents, floored to a whole 4-kind cycle;
 #: the max() keeps the gate-scale corpus (500 docs at sf0.01 AND

@@ -722,6 +722,8 @@ def lowfreq_content(
     guarantees depend on lives in one place."""
     import numpy as np
 
+    from covid_data_challenge_spark.operators.jpeg import separable_product
+
     rnd = np.frombuffer(
         hashlib.sha256((key or f"media-img-{seed}").encode()).digest() * 4,
         dtype=np.uint8,
@@ -733,7 +735,7 @@ def lowfreq_content(
     coef[0:8, 0:8] = (signs * mags).reshape(8, 8) * np.outer(decay, decay)
     coef[0, 0] = 0.0
     a32 = _dct_matrix_n(32)
-    g = a32.T @ coef @ a32  # orthonormal inverse DCT
+    g = separable_product(a32.T, coef)  # orthonormal inverse DCT
     g = g - g.min()
     g = g * (span / max(g.max(), 1e-9)) + lo
     g32 = np.clip(np.round(g), 0, 255).astype(np.uint8)
@@ -800,8 +802,10 @@ def synth_jpeg_progressive_table(spark: SparkSession, n: int = 32) -> DataFrame:
 # frequency AC coefficients against their median. Re-encodings of the
 # SAME image (PNG vs JPEG q90 vs q75+4:2:0) land within a few bits;
 # different images ~31 bits apart (measured: intra ≤ 6, inter ≥ 12 on
-# the fixture corpus). All float64 — deterministic, so the fixture
-# corpus's expected pairs commit as a golden-parquet oracle.
+# the fixture corpus). All float64, the DCT in jpeg.separable_product's
+# fixed summation order (no BLAS, so no CPU-dependent FMA rounding) —
+# deterministic, so the fixture corpus's expected pairs commit as a
+# golden-parquet oracle.
 # ---------------------------------------------------------------------------
 
 PHASH_BITS = 63
@@ -843,13 +847,15 @@ def phash63(payload: bytes):
     odd count, so the median is an element, never an interpolation."""
     import numpy as np
 
+    from covid_data_challenge_spark.operators.jpeg import separable_product
+
     img = decode_image_auto(bytes(payload))
     if img is None:
         return None
     a32 = _dct_matrix_n(32)
     gray = img.astype(np.float64).mean(axis=2)
     g32 = resize_nearest(gray[..., None].repeat(3, axis=2), 32, 32).mean(axis=2)
-    d = a32 @ g32 @ a32.T
+    d = separable_product(a32, g32)
     vals = d[0:8, 0:8].flatten()[1:]
     med = np.sort(vals)[31]
     h = 0
@@ -1043,11 +1049,13 @@ def _frame_word63(luma) -> int:
     """pHash rule over one grayscale frame → 63-bit word."""
     import numpy as np
 
+    from covid_data_challenge_spark.operators.jpeg import separable_product
+
     a32 = _dct_matrix_n(32)
     g32 = resize_nearest(
         luma[..., None].repeat(3, axis=2).astype(np.uint8), 32, 32
     ).mean(axis=2).astype(np.float64)
-    d = a32 @ g32 @ a32.T
+    d = separable_product(a32, g32)
     vals = d[0:8, 0:8].flatten()[1:]
     med = np.sort(vals)[31]
     w = 0

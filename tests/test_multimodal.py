@@ -997,6 +997,68 @@ def test_media_corpus_decode_stats_matches_golden(spark, sf_dir):
     assert sum(1 for t in want if not t[3]) == 2  # the two quarantine rows
 
 
+def test_media_corpus_kernel_replay_matches_golden():
+    """The kernel layer alone, no Spark: replaying the 48 gate items
+    through auto_features (as tools/gen_media_golden.py:gen_features
+    does) reproduces the committed features golden exactly, so a kernel
+    or codec change fails here before the hash gate. Exact float32
+    equality also pins the codecs' DCT to a summation order that does
+    not depend on which BLAS kernel the CPU selects."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from covid_data_challenge_spark.operators.media_corpus import (
+        corpus_item,
+        corpus_size,
+    )
+    from covid_data_challenge_spark.operators.multimodal import auto_features
+    from covid_data_challenge_spark.queries_multimodal import _FIXTURES
+
+    got = []
+    for i in range(corpus_size(500)):
+        media_id, kind, payload, *_ = corpus_item(i)
+        feats = auto_features(bytes(payload))
+        if feats is None:
+            got.append((media_id, kind, len(payload), False, None, None))
+            continue
+        for j, v in enumerate(feats):
+            got.append(
+                (media_id, kind, len(payload), True, j, np.float32(v).item())
+            )
+    golden = pq.read_table(f"{_FIXTURES}/media_corpus_features_golden.parquet")
+    want = list(zip(*(golden.column(c).to_pylist() for c in golden.column_names)))
+    assert sorted(got, key=repr) == sorted(want, key=repr)
+
+
+def test_separable_product_sums_in_stated_order():
+    """jpeg.separable_product is m @ x @ m.T with every product summed
+    sequentially over k, left to right, each step rounded to float64:
+    the order its docstring states. Checked bit for bit against a
+    scalar replay of that order."""
+    import numpy as np
+
+    from covid_data_challenge_spark.operators.jpeg import _A, separable_product
+
+    def seq_matmul(a, b):
+        out = np.empty((a.shape[0], b.shape[1]))
+        for i in range(a.shape[0]):
+            for j in range(b.shape[1]):
+                acc = float(a[i, 0]) * float(b[0, j])
+                for k in range(1, a.shape[1]):
+                    acc = acc + float(a[i, k]) * float(b[k, j])
+                out[i, j] = acc
+        return out
+
+    rng = np.random.default_rng(7)
+    for _ in range(20):
+        x = rng.integers(0, 256, size=(8, 8)).astype(np.float64) - 128.0
+        want = seq_matmul(seq_matmul(_A, x), _A.T)
+        assert separable_product(_A, x).tobytes() == want.tobytes()
+        coef = np.round(want / 7.0) * 7.0
+        want_inv = seq_matmul(seq_matmul(_A.T, coef), _A)
+        assert separable_product(_A.T, coef).tobytes() == want_inv.tobytes()
+
+
 def test_tile_phash_screen_catches_crop_and_pad(spark, sf_dir):
     """The 2-D transform-tolerance family on the r12 8-px-hop dual
     grid (offsets in HOP units): the incremental screen reports

@@ -15,6 +15,10 @@ first, a plumbing/schema/quarantine change fails the hash gate.
 Run from the repo root after changing corpus_item or the kernels:
 python tools/gen_media_golden.py  (then bump MEDIA_CORPUS_VERSION if
 the corpus layout itself changed, so cached /tmp gold tables rebuild).
+The bump is also owed when a change to kernel arithmetic (the codecs'
+DCT order, say) changes the payload bytes: the gold-store key holds
+the version, not the code, so a stored corpus keeps serving the old
+bytes until the version moves.
 """
 
 from __future__ import annotations
